@@ -23,6 +23,19 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   private def fmt(v: Double): String = f"$v%.3f"
 
+  /** Seconds one family's memo warm-up takes. A failure ends the run
+    * with an exception naming the family: swallowed, it would only
+    * resurface as that family's memos building inside a timed query
+    * row — a slower row, not a visible failure. */
+  private[graft] def warmUp(family: String)(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    try body
+    catch { case e: Exception =>
+      throw new IllegalStateException(s"$family family memo warm-up failed: $e", e)
+    }
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -113,27 +126,20 @@ object Bench {
     // whenever run order changes (r14's graph_components "+28% on
     // unchanged code"). Warm the family before the timed passes and
     // report the seconds as their own field; skipped when the probe
-    // selection has no graph queries.
-    val memoWarmSec = {
-      var tot = 0.0
-      if (selected.keysIterator.exists(_.startsWith("graph_"))) {
-        val t0 = System.nanoTime()
-        try graft.queries.GraphQueries.warmFamily(spark, sfDir)
-        catch { case _: Throwable => () }
-        tot += (System.nanoTime() - t0) / 1e9
-      }
+    // selection has no graph queries. A failed warm-up stops the
+    // session and ends the run non-zero (see warmUp).
+    val memoWarmSec = try {
+      (if (selected.keysIterator.exists(_.startsWith("graph_")))
+        warmUp("graph")(graft.queries.GraphQueries.warmFamily(spark, sfDir))
+      else 0.0) +
       // round-15: the LLM/ANN family grew its own shared memos
       // (signature table, brute-force truth, HNSW graph) — warm them
       // under the same attribution convention (cost visible here, not
       // aliased onto the first consumer query)
-      if (selected.keysIterator.exists(_.startsWith("llm_"))) {
-        val t0 = System.nanoTime()
-        try graft.queries.LlmExtra.warmSharedLlm(spark, sfDir)
-        catch { case _: Throwable => () }
-        tot += (System.nanoTime() - t0) / 1e9
-      }
-      tot
-    }
+      (if (selected.keysIterator.exists(_.startsWith("llm_")))
+        warmUp("llm")(graft.queries.LlmExtra.warmSharedLlm(spark, sfDir))
+      else 0.0)
+    } catch { case e: IllegalStateException => spark.stop(); throw e }
     // min over two INTERLEAVED passes: single-shot timings on a shared VM
     // see multi-second host stalls (observed 10-20x on random queries);
     // back-to-back repeats of one query sit inside the same stall, so the

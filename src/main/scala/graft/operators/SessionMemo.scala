@@ -21,8 +21,15 @@ import org.apache.spark.sql.SparkSession
   *   - cached frames inside entries are registered with [[GraftCaches]]
   *     by their builders, so `SparkEntry.releaseCaches()` (which also
   *     calls [[clear]]) both unpersists the blocks and drops the memo;
-  *   - the IMMUTABLE-DIR assumption of `tables.Tables.t` applies: a
-  *     host that rewrites inputs in place calls releaseCaches() first.
+  *   - derived entries assume a testdata dir is not rewritten under a
+  *     live session (see `tables.Tables`): a host that rewrites inputs
+  *     in place calls releaseCaches() first. Table schemas are the
+  *     exception — their keys carry the file's length and modification
+  *     time, so a rewritten file misses and re-resolves.
+  *
+  * Kinds in use: `table_schema` (`tables.Tables.t`, one parquet schema
+  * per table file version), `minhashSigs`, `annTruth10` (Llm),
+  * `ivfTop10`, `hnswReadout`, `hnswGraph|<m>`, `pqTop5` (LlmExtra).
   *
   * Per-kind build seconds are recorded (the round-15 bench-attribution
   * convention) so artifacts can report where shared-derivation time

@@ -1,24 +1,31 @@
 package graft.tables
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** Parquet table access for the driver testdata (TESTDATA.md).
   *
-  * One parquet file per table; scans are plain `spark.read.parquet` so
-  * Catalyst's column pruning and filter pushdown reach the vectorized
-  * parquet reader untouched. At 100 TB these would be directory-backed
-  * (partitioned) datasets instead of single files — the call site is the
-  * single place to swap that in.
+  * One parquet file per table, read as `spark.read.schema(s).parquet`
+  * so Catalyst's column pruning and filter pushdown reach the
+  * vectorized parquet reader untouched. The schema `s` is resolved
+  * once per live session and file version through
+  * `operators.SessionMemo` (kind `table_schema`): without a given
+  * schema every read infers it from the footer in a one-task Spark
+  * job, ~80 ms of driver time per table a query touches. At 100 TB
+  * these would be directory-backed (partitioned) datasets instead of
+  * single files — the call site is the single place to swap that in.
   *
-  * IMMUTABILITY ASSUMPTION: callers above this layer (the GraphQueries
-  * edge-family memo, LlmExtra's `trainedMerges`) cache values keyed by
-  * (session, dir) on the premise that a testdata dir's parquet files
-  * never change under a live session. Rewriting `dir` in place while a
-  * session that has already read it stays open serves STALE cached
-  * derivations — restart the session (or call `releaseCaches()` /
-  * `releaseMerges()`) after any in-place rewrite.
+  * FILE VERSIONS: the schema key is the path plus the file's length
+  * and modification time, so a file rewritten in place has its schema
+  * inferred again on the next read and is never read with a stale one.
+  * Derivations cached above this layer (the GraphQueries edge-family
+  * memo, the LLM/ANN session memos, LlmExtra's `trainedMerges`) are
+  * keyed by (session, dir) only, on the premise that a testdata dir's
+  * contents never change under a live session: after an in-place
+  * rewrite they serve STALE results until the session restarts or
+  * `SparkEntry.releaseCaches()` runs.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -33,9 +40,11 @@ object Tables {
       // timestamp[us] (read as TIMESTAMP_NTZ when the footer lacks the
       // UTC-adjusted flag). Branch on the loaded type so every downstream
       // query sees one stable contract: `ts` as session-UTC TimestampType
-      // at microsecond precision, regardless of generation.
+      // at microsecond precision, regardless of generation. The conf is
+      // set before the schema is resolved, so the cached schema is the
+      // one inferred under it.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$dir/$name.parquet")
+      val df = read(spark, s"$dir/$name.parquet")
       df.schema("ts").dataType match {
         case LongType =>
           // Raw nanos-as-long: integer DIV keeps full microsecond
@@ -45,7 +54,17 @@ object Tables {
         case _ => // TIMESTAMP_NTZ (or other): align to TimestampType.
           df.withColumn("ts", col("ts").cast(TimestampType))
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else read(spark, s"$dir/$name.parquet")
+  }
+
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val schema = graft.operators.SessionMemo.memoized(spark,
+        s"table_schema|$path|${st.getLen}|${st.getModificationTime}", "table_schema") {
+      spark.read.parquet(path).schema
+    }
+    spark.read.schema(schema).parquet(path)
   }
 
   /** Widen a NARROW scan to cluster parallelism before explode-amplified

@@ -61,18 +61,20 @@ object Bridge {
     * the ORIGIN stats localCheckpoint copied, which is exactly the
     * compounding k^r value freshStatsView exists to discard. Falls back
     * to default leaf stats when the storage info is missing (e.g. the
-    * blocks were evicted before the view was built). */
+    * blocks were evicted before the view was built), and when the frame
+    * is not itself a checkpoint: a plan that merely CONTAINS one (a join
+    * over a checkpoint) is larger or smaller than that checkpoint's
+    * blocks, so their size would be a wrong leaf statistic. */
   def measuredCkptView(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val cdf = df.asInstanceOf[DataFrame]
     val qe = cdf.queryExecution
     val session = cdf.sparkSession
-    val ckptRddId = qe.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }
-    val measured = ckptRddId
-      .flatMap(id => session.sparkContext.getRDDStorageInfo.find(_.id == id))
-      .map(i => org.apache.spark.sql.catalyst.plans.logical.Statistics(
-        sizeInBytes = BigInt(i.memSize + i.diskSize).max(1)))
+    val measured = (qe.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        session.sparkContext.getRDDStorageInfo.find(_.id == lr.rdd.id)
+      case _ => None
+    }).map(i => org.apache.spark.sql.catalyst.plans.logical.Statistics(
+      sizeInBytes = BigInt(i.memSize + i.diskSize).max(1)))
     val plan = org.apache.spark.sql.execution.LogicalRDD(
       qe.analyzed.output, qe.toRdd)(session, measured, None)
     org.apache.spark.sql.classic.Dataset.ofRows(session, plan)

@@ -121,6 +121,30 @@ class PlanLintSpec extends GraftSpec {
       s"queries with never-exercised output leaf types: ${offenders.mkString("; ")}")
   }
 
+  /** A testdata table read that bypasses `Tables.t`: a parquet read
+    * (`.parquet(...)`, or `format("parquet")...load(...)`) of a path
+    * rooted at the query's `dir` argument. Such a read infers its schema
+    * in a Spark job on every call instead of using the session's cached
+    * schema. Paths a query builds for its own scratch output (`path`,
+    * `parts`) do not match. */
+  private val directTableRead =
+    """(?s)(\.parquet|format\(\s*"parquet"\s*\)(\s*\.\w+\([^()]*\))*\s*\.load)\(\s*s"\$\{?dir\b""".r
+
+  test("no query reads a testdata table without Tables.t") {
+    assert(directTableRead.findFirstIn("""s.read.parquet(s"$dir/orders.parquet")""").isDefined)
+    assert(directTableRead.findFirstIn(
+      "s.read.format(\"parquet\")\n  .option(\"a\", \"b\")\n  .load(s\"${dir}/part.parquet\")").isDefined)
+    assert(directTableRead.findFirstIn("""s.read.parquet(path)""").isEmpty)
+    val srcDir = new java.io.File("src/main/scala/graft/queries")
+    val sources = Option(srcDir.listFiles).toSeq.flatten.filter(_.getName.endsWith(".scala"))
+    assert(sources.nonEmpty, s"no query sources under ${srcDir.getAbsolutePath}")
+    val offenders = sources.filter { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try directTableRead.findFirstIn(src.mkString).isDefined finally src.close()
+    }.map(_.getName)
+    assert(offenders.isEmpty, s"direct testdata parquet reads (use Tables.t): ${offenders.mkString(", ")}")
+  }
+
   test("whitelisted nested-loop queries still have one (keep the list honest)") {
     val stale = allowNestedLoop.toSeq.sorted.filterNot { name =>
       val p = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
