@@ -133,9 +133,9 @@ object Bench {
         warmUp("graph")(graft.queries.GraphQueries.warmFamily(spark, sfDir))
       else 0.0) +
       // round-15: the LLM/ANN family grew its own shared memos
-      // (signature table, brute-force truth, HNSW graph) — warm them
-      // under the same attribution convention (cost visible here, not
-      // aliased onto the first consumer query)
+      // (signature table, brute-force truth, HNSW graph, both BPE
+      // trainings) — warm them under the same attribution convention
+      // (cost visible here, not aliased onto the first consumer query)
       (if (selected.keysIterator.exists(_.startsWith("llm_")))
         warmUp("llm")(graft.queries.LlmExtra.warmSharedLlm(spark, sfDir))
       else 0.0)
@@ -247,8 +247,7 @@ object Bench {
     // cache() builds materialize inside the warm-up count and read ~0
     // here) go in the durable artifact, not the tail-budgeted line
     val memoPart = {
-      val bs = (graft.queries.GraphQueries.memoBuildSeconds ++
-        graft.operators.SessionMemo.buildSeconds).toSeq.sortBy(_._1)
+      val bs = graft.operators.SessionMemo.buildSeconds.toSeq.sortBy(_._1)
       if (bs.isEmpty) ""
       else s""","memo_build":${bs.map { case (k, v) => s"${jstr(k)}:${fmt(v)}" }.mkString("{", ",", "}")}"""
     }

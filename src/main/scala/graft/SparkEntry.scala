@@ -14,16 +14,19 @@ import graft.oracle.OracleSql
   * caller materializes, so a query whose plan persists an intermediate
   * referenced more than once (dq_sequence_gaps' key table, k-core's
   * final alive set, modularity's labeled edges, the DBSCAN grid, the
-  * graph family's shared memo) cannot unpersist it before returning —
+  * family-shared memo frames) cannot unpersist it before returning —
   * the blocks stay cached and are reclaimed by the block manager's LRU
   * under memory pressure (storage is MEMORY_AND_DISK; eviction is safe,
   * lineage rebuilds). A long-lived session embedding this library calls
   * `releaseCaches()` between query batches for deterministic cache
-  * pressure — it drops ONLY graft-owned state (the graph family's
-  * shared memo and every frame queries registered with
-  * `operators.GraftCaches`), leaving the host's own cached tables
-  * alone; `spark.catalog.clearCache()` remains the blunter
-  * whole-session alternative.
+  * pressure — it drops ONLY graft-owned state, leaving the host's own
+  * cached tables alone; `spark.catalog.clearCache()` remains the
+  * blunter whole-session alternative. That state lives in two places:
+  * the session memo (`operators.SessionMemo`, every family-shared
+  * derivation and table schema) and the frame registry
+  * (`operators.GraftCaches`). Every persisted frame — a memo value's
+  * included — registers with `GraftCaches` where it is built, so
+  * release is those two calls and nothing else.
   */
 object SparkEntry {
 
@@ -32,8 +35,6 @@ object SparkEntry {
     * sessions; released frames rebuild from lineage if a held plan
     * re-reads them. */
   def releaseCaches(): Unit = {
-    graft.queries.GraphQueries.releaseCaches()
-    graft.queries.LlmExtra.releaseMerges()
     graft.operators.SessionMemo.clear()
     graft.operators.GraftCaches.releaseAll()
   }

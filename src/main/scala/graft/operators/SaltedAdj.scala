@@ -74,6 +74,14 @@ final class SaltedAdj private (
     edges.unpersist()
     degs.unpersist()
   }
+
+  /** Register both caches with [[GraftCaches]] (so
+    * `SparkEntry.releaseCaches()` drops them); returns this. */
+  def registered(): SaltedAdj = {
+    GraftCaches.register(edges)
+    GraftCaches.register(degs)
+    this
+  }
 }
 
 object SaltedAdj {

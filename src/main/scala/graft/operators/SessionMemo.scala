@@ -2,43 +2,49 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Generic (session, key)-scoped memo of family-shared derivations —
-  * the `GraphQueries.memoized` convention extracted so the LLM/ANN
-  * families can share derived tables the same way the graph family
-  * shares its adjacency (round-15 optimization: the HNSW navigable
-  * graph, the brute-force truth top-10 and the MinHash signature table
-  * were each rebuilt by every consumer query — 2–5 rebuilds per bench
-  * pass of byte-identical intermediates).
+/** The engine's one (session, key)-scoped memo of family-shared
+  * derivations: a frame or driver-side value that two or more queries
+  * read is built once per live session instead of once per consumer.
   *
-  * Semantics (identical to the graph-family memo):
+  * Semantics:
   *   - keyed on the LIVE session reference + caller key (the map key is
-  *     the (key, session) PAIR since round 16, so two concurrently live
-  *     sessions sharing a key each keep their own entry instead of
-  *     overwriting each other's on every alternation);
-  *   - entries never survive the session — nothing crosses a
-  *     bench/verify invocation boundary, every invocation computes from
-  *     the parquet inputs;
-  *   - cached frames inside entries are registered with [[GraftCaches]]
-  *     by their builders, so `SparkEntry.releaseCaches()` (which also
-  *     calls [[clear]]) both unpersists the blocks and drops the memo;
+  *     the (key, session) pair, so two concurrently live sessions
+  *     sharing a key each keep their own entry);
+  *   - entries never survive the session — entries of stopped sessions
+  *     are evicted on every lookup, and nothing crosses a bench/verify
+  *     invocation boundary;
   *   - derived entries assume a testdata dir is not rewritten under a
   *     live session (see `tables.Tables`): a host that rewrites inputs
-  *     in place calls releaseCaches() first. Table schemas are the
-  *     exception — their keys carry the file's length and modification
-  *     time, so a rewritten file misses and re-resolves.
+  *     in place calls `SparkEntry.releaseCaches()` first. Table schemas
+  *     are the exception — their keys carry the file's length and
+  *     modification time, so a rewritten file misses and re-resolves.
   *
-  * Kinds in use: `table_schema` (`tables.Tables.t`, one parquet schema
-  * per table file version), `minhashSigs`, `annTruth10` (Llm),
-  * `ivfTop10`, `hnswReadout`, `hnswGraph|<m>`, `pqTop5` (LlmExtra).
+  * Release contract: a builder registers every persisted frame its
+  * value holds with [[GraftCaches]] at build time. `clear()` then only
+  * drops the entries, and `SparkEntry.releaseCaches()` is
+  * `SessionMemo.clear(); GraftCaches.releaseAll()` — no per-kind
+  * release code exists anywhere.
   *
-  * Per-kind build seconds are recorded (the round-15 bench-attribution
-  * convention) so artifacts can report where shared-derivation time
-  * went instead of aliasing it to whichever query ran first. Callers
-  * pass a dir-free `kind` for the attribution key (round-15 ADVICE:
-  * the raw keys embed the absolute sf dir, which leaked host paths
-  * into artifacts and broke key stability across SF dirs). Builds run
-  * under a PER-ENTRY lock, not the map lock, so an eager multi-second
-  * Spark build on one key never serializes lookups of unrelated keys.
+  * Kinds in use:
+  *   - `table_schema` (`tables.Tables.t`, one parquet schema per table
+  *     file version);
+  *   - graph family (`queries.GraphQueries`): `simEdges`, `symAdj`,
+  *     `symNodes`, `symDeg`, `saltedSymAdj`, `saltedSymAdjBfs`,
+  *     `lpaLabels`, `prAdjLoop`, `louvainL1`, `louvainTrace`,
+  *     `hIndex12`, `uniformWalk`, `node2vecWalk`, `landmarkReach`;
+  *   - LLM/ANN family: `minhashSigs`, `annTruth10` (`queries.Llm`),
+  *     `ivfTop10`, `hnswReadout`, `hnswGraph|<m>`, `pqTop5`,
+  *     `bpeMerges`, `bpeRich` (`queries.LlmExtra`).
+  *
+  * Per-kind build seconds are recorded so artifacts report where
+  * shared-derivation time went instead of aliasing it to whichever
+  * query ran first. Callers pass a dir-free `kind` for the attribution
+  * key (the raw keys embed the absolute data dir, which would leak host
+  * paths into artifacts). Builds run under a PER-ENTRY lock, not the
+  * map lock, so an eager multi-second Spark build on one key never
+  * serializes lookups of unrelated keys; a build may nest lookups of
+  * other keys (symAdj → simEdges), as long as no two builds nest each
+  * other.
   */
 object SessionMemo {
   private final class Slot { var value: AnyRef = null }
@@ -69,8 +75,8 @@ object SessionMemo {
 
   /** Drop every entry (frames themselves are unpersisted by
     * GraftCaches.releaseAll, which SparkEntry.releaseCaches runs in the
-    * same call). Build-seconds reset too (round-15 ADVICE): a rebuild
-    * after a mid-session release would otherwise accumulate into the
-    * same keys and double-count against memo_warm_sec. */
+    * same call). Build-seconds reset too: a rebuild after a mid-session
+    * release would otherwise accumulate into the same keys and
+    * double-count against memo_warm_sec. */
   def clear(): Unit = memo.synchronized { memo.clear(); buildSecs.clear() }
 }

@@ -11,64 +11,19 @@ import graft.tables.Tables.t
 object GraphQueries {
 
   /** Per-(session, testdata-dir) memo of the graph family's SHARED
-    * derivations. All seven similarity-graph queries start from the
-    * same two-blocking edge set, and re-deriving it per query — the
-    * capped blocking self-join (+ distinct), the symmetric adjacency,
-    * the SaltedAdj degree census, the LPA labels modularity re-runs —
-    * paid ~3.5 s of pure scheduling SEVEN times per Verify/Bench pass
-    * (measured: the edge derivation alone is 3.6 s at sf0.1 on 1,200
-    * docs — all stage scheduling, no data). The memo builds each
-    * artifact once per (session, dir) and the family shares the cached
-    * frames; at 100 TB this is exactly the "derive the dimension once,
-    * cache it, fan the analyses out" posture a production graph suite
-    * runs. Entries are keyed on the session REFERENCE too, so a stopped
-    * test session's dead frames are rebuilt, never reused. The shared
-    * caches deliberately outlive each query (they back the whole
-    * family); eviction is the block manager's LRU — the same contract
-    * as the per-query persists they replace, at 1/7th the copies. The
-    * single reentrant lock is safe for the nested builds below
-    * (symAdj → simEdges).
-    *
-    * IMMUTABLE-DIR ASSUMPTION (shared with `tables.Tables.t`): the
-    * parquet under `dir` is not rewritten within a session's lifetime —
-    * the testdata contract, and the posture of an immutable data lake.
-    * A host that DOES rewrite inputs in place calls
-    * `SparkEntry.releaseCaches()` (which clears this memo) first, or
-    * the family serves the cached pre-rewrite edges. Entries whose
-    * session has since been STOPPED are evicted on every lookup — dead
-    * frames are never served and don't wait for a key collision. */
-  private val memo =
-    scala.collection.mutable.HashMap.empty[String, (SparkSession, AnyRef)]
-
-  /** Wall seconds spent INSIDE each memo build, by kind — the
-    * round-15 attribution fix: the shared-memo cost lands on whichever
-    * query happens to run first in a bench pass, so round-over-round
-    * per-query diffs aliased cache attribution (r14's
-    * `graph_components` "+28% on unchanged code" was exactly this).
-    * `Bench` warms the family up front and emits these seconds as
-    * their own artifact field instead. NOTE: lazy builds (a cache()
-    * marker) record ~0 here — their materialization cost is what
-    * `warmFamily`'s counts absorb; the loop-driving builds (lpaLabels,
-    * louvainL1) record their real wall time. */
-  private val buildSecs = scala.collection.mutable.HashMap.empty[String, Double]
-
-  private[graft] def memoBuildSeconds: Map[String, Double] =
-    memo.synchronized(buildSecs.toMap)
-
+    * derivations (edge set, adjacencies, degree census, LPA labels,
+    * walks, ...), served through [[graft.operators.SessionMemo]]. The
+    * entries assume the parquet under `dir` is not rewritten within a
+    * session's lifetime (the immutable-dir assumption shared with
+    * `tables.Tables.t`): a host that rewrites inputs in place calls
+    * `SparkEntry.releaseCaches()` first. */
   private def memoized[T <: AnyRef](s: SparkSession, dir: String, kind: String)(
-      build: => T): T = memo.synchronized {
-    memo.filterInPlace { case (_, (sess, _)) => !sess.sparkContext.isStopped }
-    val key = s"$kind|$dir"
-    memo.get(key) match {
-      case Some((sess, v)) if sess eq s => v.asInstanceOf[T]
-      case _ =>
-        val t0 = System.nanoTime()
-        val v = build
-        buildSecs(kind) = buildSecs.getOrElse(kind, 0.0) + (System.nanoTime() - t0) / 1e9
-        memo.put(key, (s, v))
-        v
-    }
-  }
+      build: => T): T =
+    graft.operators.SessionMemo.memoized(s, s"$kind|$dir", kind)(build)
+
+  /** Alias of `SessionMemo.buildSeconds`, kept for `perfbench`. */
+  private[graft] def memoBuildSeconds: Map[String, Double] =
+    graft.operators.SessionMemo.buildSeconds
 
   /** Build AND MATERIALIZE every family-shared memo artifact up front
     * — the bench-attribution hook (round-14 verdict task 4): when
@@ -96,21 +51,6 @@ object GraphQueries {
     landmarkReach(s, dir).count()
     uniformWalkVisits(s, dir)
     node2vecWalkShared(s, dir)
-  }
-
-  /** Drop every family-shared cache (the memoized frames above and the
-    * SaltedAdj wrappers' internal caches) and clear the memo — the
-    * graph half of `SparkEntry.releaseCaches()`. Stopped-session
-    * entries unpersist as no-ops. */
-  private[graft] def releaseCaches(): Unit = memo.synchronized {
-    memo.valuesIterator.foreach {
-      case (_, df: org.apache.spark.sql.Dataset[_]) => // DataFrame (erased elem)
-        try df.unpersist(blocking = false) catch { case _: Throwable => () }
-      case (_, sadj: graft.operators.SaltedAdj) =>
-        try sadj.unpersist() catch { case _: Throwable => () }
-      case _ => ()
-    }
-    memo.clear()
   }
 
   /** localCheckpoint(eager) + GraftCaches registration + STATS-RESET
@@ -205,7 +145,7 @@ object GraphQueries {
     * touches the family-shared frame. */
   private def saltedSymAdj(s: SparkSession, dir: String): graft.operators.SaltedAdj =
     memoized(s, dir, "saltedSymAdj") {
-      graft.operators.SaltedAdj(symAdj(s, dir).select(col("u"), col("v")))
+      graft.operators.SaltedAdj(symAdj(s, dir).select(col("u"), col("v"))).registered()
     }
 
   /** BFS variant of the shared salted adjacency: real edges carry hop
@@ -221,6 +161,7 @@ object GraphQueries {
         .select(col("node").as("u"), col("node").as("v"), lit(0L).as("w"))
       graft.operators.SaltedAdj(
         symAdj(s, dir).select(col("u"), col("v")).withColumn("w", lit(1L)).union(loops))
+        .registered()
     }
 
   /** PageRank (damping 0.85, 3 rounds) over a similarity graph: nodes
@@ -273,7 +214,7 @@ object GraphQueries {
     * first (inert at graded SF: blocks run 1..10). The per-round
     * edges⋈rank join is hub-salted via SaltedAdj (power-law tails put a
     * hub's whole adjacency in one reducer otherwise; census finds no
-    * hubs at graded SF → zero-overhead path). Both persists register
+    * hubs at graded SF → zero-overhead path). Every persist registers
     * with `GraftCaches` (the returned plans reference them lazily). */
   private def prGraph(s: SparkSession, dir: String)
       : (graft.operators.SaltedAdj, DataFrame, DataFrame) = {
@@ -293,8 +234,7 @@ object GraphQueries {
     val deg = graft.operators.GraftCaches.register(
       sadj.edges.groupBy("u").agg(count(lit(1)).as("deg"))
         .withColumnRenamed("u", "node").persist())
-    graft.operators.GraftCaches.register(sadj.edges)
-    (sadj, deg, docs.select("node"))
+    (sadj.registered(), deg, docs.select("node"))
   }
 
   /** CONVERGENCE-MODE PageRank (damping 0.5, integer 1e-6 units) over
@@ -347,11 +287,12 @@ object GraphQueries {
     // real edges carry the u-side out-degree (contribution divisor);
     // self-loops are marked deg = 0 and thread the node's own history
     val prAdj = memoized(s, dir, "prAdjLoop") {
-      symAdj(s, dir).join(symDeg(s, dir), "u")
-        .select(col("u"), col("v"), col("deg"))
-        .union(nodes.select(col("node").as("u"), col("node").as("v"),
-          lit(0L).as("deg")))
-        .cache()
+      graft.operators.GraftCaches.register(
+        symAdj(s, dir).join(symDeg(s, dir), "u")
+          .select(col("u"), col("v"), col("deg"))
+          .union(nodes.select(col("node").as("u"), col("node").as("v"),
+            lit(0L).as("deg")))
+          .cache())
     }
     // frame: (node, r = current rank, rh = array of ranks r_0..r_j)
     def prRound(rank: DataFrame): DataFrame =
@@ -1382,18 +1323,12 @@ object GraphQueries {
       // a one-node measured-stats view (round 16), so the child
       // session's temp view no longer inlines 12 copies of the
       // simEdges lineage per action (measured: straight chain
-      // 5.7→4.8 s cold at sf0.1). The convergence-HALVED chain (r15
-      // verdict task 5) was built, spec-pinned equal, and MEASURED
-      // SLOWER here: the family graph's h-index settles at round 10 of
-      // 12 (per-round sums probe), so the 6-round early exit never
-      // fires and the split costs an extra materialization boundary
-      // (+1.5 s) — halved stays available for convergence-fast graphs,
-      // default off.
+      // 5.7→4.8 s cold at sf0.1).
       // chain width derived from the measured edge count (round 16 —
       // the loopWidth policy; the old constant 8 was a local-mode tune)
       val w = math.max(1L,
         symAdj(s, dir).count() / graft.operators.Components.RowsPerPartition).toInt
-      val (prev, fin) = hIndexEstimates(symAdj(s, dir), 12, halved = false, width = w)
+      val (prev, fin) = hIndexEstimates(symAdj(s, dir), 12, width = w)
       // TRUNCATE the consumer-visible lineage: the persisted frames
       // carry the full 12-round join chain as their logical plan
       // (measured 8.1 MB of formatted plan text at sf0.1), and every
@@ -1519,8 +1454,8 @@ object GraphQueries {
     * After the count the child's confs are reset to the parent's
     * current values so downstream readouts over the returned frames
     * plan exactly as the caller would. */
-  private[graft] def hIndexEstimates(adjIn: DataFrame, rounds: Int,
-      halved: Boolean = false, width: Int = 8): (DataFrame, DataFrame) = {
+  private[graft] def hIndexEstimates(adjIn: DataFrame, rounds: Int, width: Int = 8)
+      : (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val parent = adjIn.sparkSession
     val child = parent.newSession()
@@ -1557,43 +1492,10 @@ object GraphQueries {
         }
       val est0 = adj.groupBy(col("u").as("node"))
         .agg(count(lit(1)).as("est"))
-      if (!halved || rounds < 4) {
-        val prev = graft.operators.GraftCaches.register(chain(est0, rounds - 1).persist())
-        val fin = graft.operators.GraftCaches.register(hRound(prev).persist())
-        floored(fin.count())
-        (prev, fin)
-      } else {
-        // CONVERGENCE-HALVED chain (round-16, r15 verdict task 5 — the
-        // pagerank two-halves discipline): estimates are monotone
-        // non-increasing per node and a fixpoint is absorbing, so if
-        // round h−1 == round h (equal sums ⟺ identical frames, the
-        // same monotonicity argument the readout's `converged` flag
-        // uses), every later round is that same frame — the half-chain
-        // pair IS (round rounds−1, round rounds) bit for bit and the
-        // second half never builds. A graph that hasn't settled by h
-        // extends from the materialized half. Both paths return frames
-        // bit-identical to the straight chain (`halved = false`, pinned
-        // by the halving-equality spec), so the oracle's bounded unroll
-        // stands unchanged.
-        val h = rounds / 2
-        val prevH = graft.operators.GraftCaches.register(chain(est0, h - 1).persist())
-        val finH = graft.operators.GraftCaches.register(hRound(prevH).persist())
-        // ONE action materializes both half frames AND reads the
-        // convergence sums — the non-converged overhead vs the straight
-        // chain is just this extra scheduling boundary
-        val sums = floored(
-          prevH.agg(coalesce(sum("est"), lit(0L)).as("sp"))
-            .crossJoin(finH.agg(coalesce(sum("est"), lit(0L)).as("sf"))).head)
-        if (sums.getLong(0) == sums.getLong(1)) (prevH, finH)
-        else {
-          val prev = graft.operators.GraftCaches.register(
-            chain(finH, rounds - h - 1).persist())
-          val fin = graft.operators.GraftCaches.register(hRound(prev).persist())
-          floored(fin.count())
-          prevH.unpersist(blocking = false) // superseded; finH stays — the chain reads it
-          (prev, fin)
-        }
-      }
+      val prev = graft.operators.GraftCaches.register(chain(est0, rounds - 1).persist())
+      val fin = graft.operators.GraftCaches.register(hRound(prev).persist())
+      floored(fin.count())
+      (prev, fin)
     } finally {
       parent.catalog.dropGlobalTempView(vname)
     }

@@ -1677,14 +1677,6 @@ object LlmExtra {
     trainedMerges(s, dir).toSeq.toDF("round", "pair", "n").orderBy("round")
   }
 
-  /** (session, dir)-memoized BPE merge list — `llm_bpe_train` reports
-    * it and `llm_bpe_encode` applies it, so the 13-action training loop
-    * runs once per session, not once per consumer (the GraphQueries
-    * family-memo convention; same immutable-dir assumption, entries for
-    * stopped sessions evicted on lookup, cleared by releaseCaches()). */
-  private val merges =
-    scala.collection.mutable.HashMap.empty[(SparkSession, String), Seq[(Long, String, Long)]]
-
   /** Build AND MATERIALIZE the LLM/ANN family's shared memo artifacts
     * up front — the round-15 counterpart of `GraphQueries.warmFamily`
     * (round-14 verdict-task-4 attribution discipline): each artifact is
@@ -1692,8 +1684,11 @@ object LlmExtra {
     * shared-derivation cost visible in the bench's memo_warm_sec /
     * memo_build fields instead of aliased onto whichever consumer runs
     * first. Covers the MinHash signature table (5 consumers), the
-    * brute-force truth top-10 (4 consumers) and the HNSW navigable
-    * graph (2 consumers). */
+    * brute-force truth top-10 (4 consumers), the HNSW navigable graph
+    * (2 consumers), the IVF/PQ/HNSW readouts, and both BPE trainings:
+    * the 6-round merge list (`bpeMerges`, 2 consumers) and the 32-round
+    * deep training (`bpeRich`, 3 consumers) — the costliest builds in
+    * the family, which pass 1 used to absorb and the two-pass min hid. */
   private[graft] def warmSharedLlm(s: SparkSession, dir: String): Unit = {
     graft.udx.NGrams.registerAll(s)
     graft.queries.Llm.sigsShared(s, dir).count()
@@ -1704,31 +1699,22 @@ object LlmExtra {
     hnswReadoutShared(s, dir).count()
     ivfTop10Shared(s, dir).count()
     pqTop5Shared(s, dir).count()
+    trainedMerges(s, dir)
+    richTrained(s, dir)
   }
 
-  private[graft] def releaseMerges(): Unit = {
-    merges.synchronized(merges.clear())
-    richState.synchronized {
-      richState.values.foreach { case (_, v) =>
-        try v.unpersist(blocking = false) catch { case _: Throwable => () } }
-      richState.clear()
-    }
-  }
-
+  /** (session, dir)-memoized BPE merge list (kind `bpeMerges`) —
+    * `llm_bpe_train` reports it and `llm_bpe_encode` applies it, so the
+    * 13-action training loop runs once per session, not once per
+    * consumer. */
   private def trainedMerges(s: SparkSession, dir: String): Seq[(Long, String, Long)] =
-    merges.synchronized {
-      // composite (session, dir) key: two live sessions over the same dir
-      // each keep their own entry instead of thrashing a single slot
-      // (round-10 ADVICE); stopped sessions still evict on lookup
-      merges.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      merges.getOrElseUpdate((s, dir), {
-        bpeTrainOnWords(s,
-          t(s, dir, "documents").filter(col("doc_id") < 4000)
-            .select(explode(split(col("text"), " ")).as("w"))
-            .filter(col("w") =!= ""),
-          rounds = 6)
-          .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
-      })
+    graft.operators.SessionMemo.memoized(s, s"bpeMerges|$dir", "bpeMerges") {
+      bpeTrainOnWords(s,
+        t(s, dir, "documents").filter(col("doc_id") < 4000)
+          .select(explode(split(col("text"), " ")).as("w"))
+          .filter(col("w") =!= ""),
+        rounds = 6)
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
     }
 
   /** The BPE merge loop over an arbitrary single-column word stream —
@@ -2010,26 +1996,17 @@ object LlmExtra {
         .select(explode(split(col("text"), " ")).as("w")))
       .filter(col("w") =!= "")
 
-  /** (session, dir)-memoized deep-training output — the rounds-bounded
-    * MERGE LIST (driver-side, `llm_bpe_deep_encode` applies it) plus
-    * the final word state as its checkpointed FRAME (never collected:
-    * the tokenized vocab is corpus-sized, so it stays on the
-    * executors; `llm_bpe_vocab_apply` reads it). Same memo discipline
-    * as `trainedMerges`: composite key, stopped-session eviction,
-    * released by `releaseMerges()`. */
-  private val richState = scala.collection.mutable.HashMap
-    .empty[(SparkSession, String), (Seq[(Long, String, Long)], DataFrame)]
-
+  /** (session, dir)-memoized deep-training output (kind `bpeRich`) —
+    * the rounds-bounded MERGE LIST (driver-side, `llm_bpe_deep_encode`
+    * applies it) plus the final word state as its checkpointed FRAME
+    * (never collected: the tokenized vocab is corpus-sized, so it stays
+    * on the executors; `llm_bpe_vocab_apply` reads it). The frame
+    * registers with `GraftCaches` at build. */
   private def richTrained(s: SparkSession, dir: String)
       : (Seq[(Long, String, Long)], DataFrame) =
-    richState.synchronized {
-      richState.filterInPlace { case ((sess, _), (_, v)) =>
-        val live = !sess.sparkContext.isStopped
-        if (!live) { try v.unpersist(blocking = false) catch { case _: Throwable => () } }
-        live
-      }
-      richState.getOrElseUpdate((s, dir),
-        bpeTrainFullOnWords(s, richWords(s, dir), rounds = 32))
+    graft.operators.SessionMemo.memoized(s, s"bpeRich|$dir", "bpeRich") {
+      val (merges, fin) = bpeTrainFullOnWords(s, richWords(s, dir), rounds = 32)
+      (merges, GraftCaches.register(fin))
     }
 
   /** Duplicated-n-gram-fraction quality signal (the RefinedWeb/Gopher
@@ -2678,8 +2655,8 @@ object LlmExtra {
   /** The (session, dir)-memoized PQ ADC top-5 — `llm_sim_pq_topk`
     * reports it and `llm_sim_pq_recall` grades it, so the codebook
     * training + encode + ADC pipeline runs once per session instead of
-    * once per consumer (round-15 optimization; the hnswReadoutShared /
-    * trainedMerges discipline). */
+    * once per consumer (round-15 optimization; the hnswReadoutShared
+    * discipline). */
   private def pqTop5Shared(s: SparkSession, dir: String): DataFrame =
     graft.operators.SessionMemo.memoized(s, s"pqTop5|$dir", "pqTop5") {
       GraftCaches.register(pqTop5Build(s, dir).persist())

@@ -20,9 +20,8 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * FILE VERSIONS: the schema key is the path plus the file's length
   * and modification time, so a file rewritten in place has its schema
   * inferred again on the next read and is never read with a stale one.
-  * Derivations cached above this layer (the GraphQueries edge-family
-  * memo, the LLM/ANN session memos, LlmExtra's `trainedMerges`) are
-  * keyed by (session, dir) only, on the premise that a testdata dir's
+  * Derivations cached above this layer (the graph and LLM/ANN
+  * `SessionMemo` kinds) are keyed by (session, dir) only, on the premise that a testdata dir's
   * contents never change under a live session: after an in-place
   * rewrite they serve STALE results until the session restarts or
   * `SparkEntry.releaseCaches()` runs.

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Global plan lint across the ENTIRE query inventory: no query may plan
   * a CartesianProduct or BroadcastNestedLoopJoin unless it is on the
   * explicit whitelist below — the classic silent regression is an
@@ -143,6 +145,23 @@ class PlanLintSpec extends GraftSpec {
       try directTableRead.findFirstIn(src.mkString).isDefined finally src.close()
     }.map(_.getName)
     assert(offenders.isEmpty, s"direct testdata parquet reads (use Tables.t): ${offenders.mkString(", ")}")
+  }
+
+  test("no session memo outside operators.SessionMemo") {
+    // every hand-rolled session memo needs `isStopped` to evict the
+    // entries of stopped sessions, so the call marks one
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val memo = root.resolve("graft/operators/SessionMemo.scala")
+    val walk = java.nio.file.Files.walk(root)
+    val sources =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    assert(sources.contains(memo), s"no SessionMemo under ${root.toAbsolutePath}")
+    val offenders = sources.filter { f =>
+      f != memo && java.nio.file.Files.readString(f).contains("isStopped")
+    }.map(root.relativize(_).toString)
+    assert(offenders.isEmpty,
+      s"session memo outside SessionMemo (use SessionMemo.memoized): ${offenders.mkString(", ")}")
   }
 
   test("whitelisted nested-loop queries still have one (keep the list honest)") {

@@ -1,7 +1,7 @@
 package graft
 
-/** `SparkEntry.releaseCaches()` lifecycle: the graph family's shared
-  * memo, kPeel's registered alive frames, and the registered hot-key
+/** `SparkEntry.releaseCaches()` lifecycle: the graph family's
+  * `SessionMemo` entries, kPeel's registered alive frames, and the registered hot-key
   * caches are all graft-owned state — release must drop every block graft
   * added (and nothing it didn't), and the families must rebuild
   * transparently afterwards. The suite runs against the shared JVM-wide
@@ -18,10 +18,12 @@ class ReleaseCachesSpec extends GraftSpec {
     SparkEntry.releaseCaches() // start from a clean graft-owned slate
     val before = persistentIds
     // run the family: shared memo (symAdj/symNodes/symDeg/simEdges/
-    // lpaLabels/SaltedAdj), kPeel's registered final alive frames, and
-    // the registered per-invocation persists (modularity's census,
-    // jaccard's capped adjacency). graphComponents stays OUT of the leak
-    // window: minLabel returns a localCheckpoint-backed frame whose
+    // lpaLabels/both SaltedAdj kinds/prAdjLoop/landmarkReach), kPeel's
+    // registered final alive frames, and the registered per-invocation
+    // persists (modularity's census, jaccard's capped adjacency). Every
+    // memo value reaches release only through GraftCaches, so a kind
+    // that skips registration at build leaks here. graphComponents
+    // stays OUT of the leak window: minLabel returns a localCheckpoint-backed frame whose
     // lineage is truncated — unpersisting it would make the data
     // unrecoverable, so it is deliberately not release-managed (its own
     // loop caches are unpersisted inside minLabel; ComponentsSpec covers
@@ -30,6 +32,8 @@ class ReleaseCachesSpec extends GraftSpec {
     val decomp = graft.queries.GraphQueries.graphCoreDecomposition(spark, sfDir).collect()
     graft.queries.GraphQueries.graphJaccardNeighbors(spark, sfDir).collect()
     graft.queries.GraphQueries.graphModularity(spark, sfDir).collect()
+    graft.queries.GraphQueries.graphPagerankConverged(spark, sfDir).collect()
+    graft.queries.GraphQueries.graphBfsHops(spark, sfDir).collect()
     assert((persistentIds -- before).nonEmpty, "family ran without caching anything?")
     assert(graft.operators.GraftCaches.size >= 1, "kPeel registered no alive frame")
 
