@@ -23,10 +23,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   private def fmt(v: Double): String = f"$v%.3f"
 
-  /** Seconds one family's memo warm-up takes. A failure ends the run
-    * with an exception naming the family: swallowed, it would only
-    * resurface as that family's memos building inside a timed query
-    * row — a slower row, not a visible failure. */
+  /** Seconds one warm-up takes: a family's memos, or the untimed `jit`
+    * query. A failure ends the run with an exception naming it:
+    * swallowed, it would only resurface as one-off work (memo builds,
+    * session and codegen start-up) inside a timed query row — a slower
+    * row, not a visible failure. */
   private[graft] def warmUp(family: String)(body: => Unit): Double = {
     val t0 = System.nanoTime()
     try body
@@ -71,10 +72,12 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // a failed warm-up stops the session and ends the run non-zero
+    def stopOnFail[T](body: => T): T =
+      try body catch { case e: IllegalStateException => spark.stop(); throw e }
     // untimed warm-up: session init, parquet reader, codegen JIT — the
     // ~5s one-off otherwise lands on whichever query runs first
-    try SparkEntry.queries("scan_parquet_project")(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    stopOnFail(warmUp("jit")(SparkEntry.queries("scan_parquet_project")(spark, sfDir).count()))
     // host-weather calibration anchor: a FIXED, O(1)-data, CPU-bound
     // sentinel (64M-row range aggregate, no I/O, no SF dependence)
     // whose median-of-5 runtime scales only with host speed. Emitted
@@ -126,9 +129,8 @@ object Bench {
     // whenever run order changes (r14's graph_components "+28% on
     // unchanged code"). Warm the family before the timed passes and
     // report the seconds as their own field; skipped when the probe
-    // selection has no graph queries. A failed warm-up stops the
-    // session and ends the run non-zero (see warmUp).
-    val memoWarmSec = try {
+    // selection has no graph queries.
+    val memoWarmSec = stopOnFail {
       (if (selected.keysIterator.exists(_.startsWith("graph_")))
         warmUp("graph")(graft.queries.GraphQueries.warmFamily(spark, sfDir))
       else 0.0) +
@@ -139,7 +141,7 @@ object Bench {
       (if (selected.keysIterator.exists(_.startsWith("llm_")))
         warmUp("llm")(graft.queries.LlmExtra.warmSharedLlm(spark, sfDir))
       else 0.0)
-    } catch { case e: IllegalStateException => spark.stop(); throw e }
+    }
     // min over two INTERLEAVED passes: single-shot timings on a shared VM
     // see multi-second host stalls (observed 10-20x on random queries);
     // back-to-back repeats of one query sit inside the same stall, so the

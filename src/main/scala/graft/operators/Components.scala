@@ -1,11 +1,23 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Connected components by min-label propagation — the Pregel shape on
-  * plain DataFrames (used by llm_dedup_components; upstream need: dup
-  * GROUPS, not just dup pairs, since A~B and B~C must collapse A,B,C).
+  * plain DataFrames (used by graph_components, llm_dedup_components,
+  * llm_dedup_pipeline and geo_grid_dbscan; upstream need: dup GROUPS,
+  * not just dup pairs, since A~B and B~C must collapse A,B,C).
+  *
+  * Engine choice (`minLabel`): a graph of fewer than
+  * `2 · RowsPerPartition` edge rows — exactly the graph `loopWidth`
+  * would run at width 1, so no parallelism is given up — is collected
+  * by one bounded read and labelled on the driver by union-find
+  * (`unionFind`). On such a graph the loop is pure scheduling: a 5-fold
+  * batch is ~10 serial one-task stage jobs. The driver answer is the
+  * EXACT fixpoint at any diameter, where the loop stops at its
+  * `maxRounds` cap. Larger graphs run the distributed loop
+  * (`labelLoop`) described below.
   *
   * Every node starts as its own label; each round labels flow across
   * edges and every node keeps the minimum seen; fixpoint in ≤ diameter
@@ -104,9 +116,51 @@ object Components {
           .otherwise(lit(0L)))
       .drop("_hot")
 
-  /** (node, label) fixpoint over an UNDIRECTED edge list given as both
-    * directions in `edges0(src, dst)`. */
-  def minLabel(
+  /** (node, label) connected components of an UNDIRECTED edge list
+    * given as both directions in `edges(src, dst)` with bigint node ids;
+    * each node's label is its component's minimum node id. One bounded
+    * collect reads at most `2 · RowsPerPartition` edge rows: fewer than
+    * that is exactly the graph `loopWidth` sizes to ONE partition, which
+    * the driver labels with [[unionFind]]; otherwise the rows are dropped
+    * and the distributed [[labelLoop]] runs. */
+  def minLabel(edges: DataFrame): DataFrame = {
+    val cut = 2 * RowsPerPartition // the smallest edge count loopWidth splits
+    val rows = edges.select("src", "dst").limit(cut.toInt).collect()
+    if (rows.length < cut) unionFind(edges.sparkSession, rows)
+    else labelLoop(edges)
+  }
+
+  /** Driver-side union-find over collected (src: bigint, dst: bigint)
+    * rows. `find` is iterative with path halving (a long path must not
+    * recurse through the driver stack), and the smaller root always wins
+    * a union, so every label is its component's minimum node id: the
+    * loop's fixpoint, reached exactly at any diameter. */
+  private def unionFind(s: SparkSession, rows: Array[Row]): DataFrame = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x0: Long): Long = {
+      var x = x0
+      var p = parent.getOrElseUpdate(x, x)
+      while (p != x) {
+        val gp = parent(p)
+        parent(x) = gp
+        x = gp
+        p = parent(x)
+      }
+      x
+    }
+    rows.foreach { r =>
+      val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    val labels = parent.keys.toArray.map(k => Row(k, find(k)))
+    s.createDataFrame(java.util.Arrays.asList(labels: _*), StructType(Seq(
+      StructField("node", LongType, nullable = false),
+      StructField("label", LongType, nullable = false))))
+  }
+
+  /** The distributed min-label fixpoint over the same edge list
+    * (`edges0(src, dst)`, both directions), at most `maxRounds` folds. */
+  private[graft] def labelLoop(
       edges0: DataFrame,
       maxRounds: Int = 25,
       checkpointEvery: Int = 5,

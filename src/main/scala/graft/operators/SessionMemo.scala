@@ -29,9 +29,10 @@ import org.apache.spark.sql.SparkSession
   *   - `table_schema` (`tables.Tables.t`, one parquet schema per table
   *     file version);
   *   - graph family (`queries.GraphQueries`): `simEdges`, `symAdj`,
-  *     `symNodes`, `symDeg`, `saltedSymAdj`, `saltedSymAdjBfs`,
-  *     `lpaLabels`, `prAdjLoop`, `louvainL1`, `louvainTrace`,
-  *     `hIndex12`, `uniformWalk`, `node2vecWalk`, `landmarkReach`;
+  *     `symNodes`, `symNodeCount`, `symDeg`, `saltedSymAdj`,
+  *     `saltedSymAdjBfs`, `lpaLabels`, `prAdjLoop`, `louvainL1`,
+  *     `louvainTrace`, `hIndex12`, `uniformWalk`, `node2vecWalk`,
+  *     `landmarkReach`;
   *   - LLM/ANN family: `minhashSigs`, `annTruth10` (`queries.Llm`),
   *     `ivfTop10`, `hnswReadout`, `hnswGraph|<m>`, `pqTop5`,
   *     `bpeMerges`, `bpeRich` (`queries.LlmExtra`).

@@ -36,7 +36,7 @@ object GraphQueries {
     * pagerank loop and bounded by it. */
   private[graft] def warmFamily(s: SparkSession, dir: String): Unit = {
     symAdj(s, dir).count()
-    symNodes(s, dir).count()
+    symNodeCount(s, dir)
     symDeg(s, dir).count()
     saltedSymAdj(s, dir)
     saltedSymAdjBfs(s, dir)
@@ -137,6 +137,12 @@ object GraphQueries {
     memoized(s, dir, "symNodes") {
       persistView(symAdj(s, dir).select(col("u").as("node")).distinct())
     }
+
+  /** |symNodes|, counted once per session: `graph_k_core`'s peel bound. */
+  private def symNodeCount(s: SparkSession, dir: String): Long =
+    memoized(s, dir, "symNodeCount") {
+      java.lang.Long.valueOf(symNodes(s, dir).count())
+    }.longValue
 
   /** Shared hub-salted adjacency for the Pregel-shaped loops (BFS,
     * LPA). Built over a PROJECTION of the shared symmetric adjacency so
@@ -487,15 +493,14 @@ object GraphQueries {
       .orderBy("hops")
   }
 
-  /** Connected components of the similarity graph — the full hub-salted
-    * min-label fixpoint (`operators.Components.minLabel`: self-loop
-    * linear lineage, localCheckpoint every 5 rounds, measured loop
-    * width, degree-census hub salting) exposed over the graph family's
-    * own edge set, not just the dedup graph. Per component: size and
-    * max member. The oracle mirrors the fixpoint with a recursive CTE —
-    * label propagation to a fixpoint is exactly transitive reachability
-    * to the minimum member. Runs to convergence (≤ diameter rounds),
-    * unlike the fixed-round pagerank/LPA/BFS siblings. */
+  /** Connected components of the similarity graph through
+    * `operators.Components.minLabel` (driver union-find below one loop
+    * partition of edges, else the hub-salted min-label fixpoint) over
+    * the graph family's own edge set, not just the dedup graph. Per
+    * component: size and max member. The oracle mirrors the fixpoint
+    * with a recursive CTE — label propagation to a fixpoint is exactly
+    * transitive reachability to the minimum member. Runs to
+    * convergence, unlike the fixed-round pagerank/LPA/BFS siblings. */
   def graphComponents(s: SparkSession, dir: String): DataFrame = {
     val edges = symAdj(s, dir)
       .select(col("u").as("src"), col("v").as("dst"))
@@ -1208,7 +1213,7 @@ object GraphQueries {
     * later rounds identity), so a graph whose 3-core stabilizes in round
     * one pays one census, not three. */
   def graphKCore(s: SparkSession, dir: String): DataFrame =
-    kPeel(symAdj(s, dir), symNodes(s, dir).count(), k = 3, rounds = 3)
+    kPeel(symAdj(s, dir), symNodeCount(s, dir), k = 3, rounds = 3)
       .groupBy(col("u").as("node")).agg(count(lit(1)).as("core_deg"))
       .orderBy(desc("core_deg"), col("node"))
       .limit(50)

@@ -1,13 +1,19 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.operators.Components
 
-/** operators.Components: min-label fixpoint + lineage checkpointing.
-  * The path graph is the adversarial diameter case — one label must
-  * crawl the whole chain, forcing enough rounds to cross several
-  * localCheckpoint boundaries (the llm_dedup_components corpus data
-  * converges in 2-3 rounds and never would). */
+/** operators.Components: the driver union-find, the distributed
+  * min-label fixpoint with lineage checkpointing, and the dispatch
+  * between them. The loop tests call `labelLoop` directly: their
+  * fixtures are far below the dispatch cut, so `minLabel` would label
+  * them on the driver. The path graph is the adversarial diameter case —
+  * one label must crawl the whole chain, forcing enough rounds to cross
+  * several localCheckpoint boundaries (the llm_dedup_components corpus
+  * data converges in 2-3 rounds and never would). */
 class ComponentsSpec extends GraftSpec {
 
   private def undirected(pairs: Seq[(Long, Long)]) = {
@@ -16,11 +22,25 @@ class ComponentsSpec extends GraftSpec {
     e.union(e.select(col("dst").as("src"), col("src").as("dst")))
   }
 
+  private def labelSet(df: DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** minLabel answered from a driver-built local relation, not a Spark loop */
+  private def onDriver(df: DataFrame) =
+    df.queryExecution.analyzed.isInstanceOf[LocalRelation]
+
+  private val star = (1L to 20000L).map(h => (0L, h))
+  private val hubFixture = star ++ (30000L until 30005L).map(i => (i, i + 1)) ++
+    Seq((40000L, 40001L))
+  private val pathFixture = (1L until 12L).map(i => (i, i + 1))
+  private val chainsFixture = (1L until 8L).map(i => (i, i + 1)) ++
+    (20L until 26L).map(i => (i, i + 1)) ++ Seq((100L, 101L))
+
   test("deep path graph converges across checkpoint boundaries") {
     // 12-node path: diameter 11 → ≥ 12 rounds → the every-5-rounds
     // localCheckpoint fires twice before the fixpoint
-    val edges = undirected((1L until 12L).map(i => (i, i + 1)))
-    val labels = Components.minLabel(edges).collect()
+    val edges = undirected(pathFixture)
+    val labels = Components.labelLoop(edges).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(labels.size == 12)
     assert(labels.values.forall(_ == 1L), s"all nodes join component 1: $labels")
@@ -32,14 +52,9 @@ class ComponentsSpec extends GraftSpec {
     // an isolated pair that must NOT get absorbed. hotDegree=1000 forces
     // the hub onto the salted path; the fixpoint must be identical to
     // the unsalted (hotDegree=MaxValue) run.
-    import SparkSpecBase.spark.implicits._
-    val star = (1L to 20000L).map(h => (0L, h))
-    val extra = (30000L until 30005L).map(i => (i, i + 1)) ++ Seq((40000L, 40001L))
-    val edges = undirected(star ++ extra)
-    val salted = Components.minLabel(edges, hotDegree = 1000L, salts = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val unsalted = Components.minLabel(edges, hotDegree = Long.MaxValue)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val edges = undirected(hubFixture)
+    val salted = labelSet(Components.labelLoop(edges, hotDegree = 1000L, salts = 8))
+    val unsalted = labelSet(Components.labelLoop(edges, hotDegree = Long.MaxValue))
     assert(salted == unsalted)
     val byLabel = salted.groupBy(_._2).view.mapValues(_.size).toMap
     assert(byLabel == Map(0L -> 20001, 30000L -> 6, 40000L -> 2))
@@ -51,8 +66,7 @@ class ComponentsSpec extends GraftSpec {
     // than a small multiple of degree/salts — the quantity that bounds
     // the per-reducer row count once the cache partitions on (dst, _salt)
     import SparkSpecBase.spark.implicits._
-    val deg = 20000
-    val star = (1L to deg.toLong).map(h => (0L, h))
+    val deg = star.size
     val edges = undirected(star)
     val hot = Seq(0L).toDF("node")
     val salts = 8
@@ -75,11 +89,8 @@ class ComponentsSpec extends GraftSpec {
   test("checkpoint interval does not change the fixpoint") {
     // two chains + one isolated pair; aggressive interval (every round)
     // vs effectively-never must agree exactly
-    val pairs = (1L until 8L).map(i => (i, i + 1)) ++
-      (20L until 26L).map(i => (i, i + 1)) ++ Seq((100L, 101L))
-    val edges = undirected(pairs)
-    def run(every: Int) = Components.minLabel(edges, checkpointEvery = every)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val edges = undirected(chainsFixture)
+    def run(every: Int) = labelSet(Components.labelLoop(edges, checkpointEvery = every))
     val aggressive = run(1)
     val never = run(1000)
     assert(aggressive == never)
@@ -110,6 +121,54 @@ class ComponentsSpec extends GraftSpec {
     // read as 0, not crash getLong
     import SparkSpecBase.spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
-    assert(Components.minLabel(empty).count() == 0)
+    val labels = Components.minLabel(empty)
+    assert(labels.count() == 0)
+    assert(labels.schema.map(f => (f.name, f.dataType)) ==
+      Seq("node" -> LongType, "label" -> LongType))
+    assert(Components.labelLoop(empty).count() == 0)
+  }
+
+  test("driver labels equal the loop's labels on every fixture and on graph_components' edges") {
+    // sf0.01: graph_components' graded edge set, a sibling of the spec scale
+    val sf001 = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01").getPath
+    val sym = graft.queries.GraphQueries.symAdj(spark, sf001)
+      .select(col("u").as("src"), col("v").as("dst"))
+    val fixtures = Seq(undirected(pathFixture), undirected(hubFixture),
+      undirected(chainsFixture), undirected(Seq.empty), sym)
+    for (edges <- fixtures) {
+      val driver = Components.minLabel(edges)
+      assert(onDriver(driver))
+      assert(labelSet(driver) == labelSet(Components.labelLoop(edges)))
+    }
+    graft.SparkEntry.releaseCaches()
+  }
+
+  test("a 50,000-node path is labelled on the driver without a StackOverflowError") {
+    // descending order grows a 50,000-deep parent chain before any find
+    // walks it: a recursive find overflows here; the loop would stop
+    // at its fold cap long before the label crossed the path
+    val pairs = (49999L to 1L by -1L).map(i => (i, i + 1))
+    val edges = undirected(pairs)
+    val labels = Components.minLabel(edges)
+    assert(onDriver(labels))
+    val byLabel = labelSet(labels).groupBy(_._2).view.mapValues(_.size).toMap
+    assert(byLabel == Map(1L -> 50000))
+  }
+
+  test("dispatch: 99,999 edge rows take the driver path, 100,000 take the loop") {
+    import SparkSpecBase.spark.implicits._
+    // disjoint pairs converge in one fold, so the loop side stays cheap
+    val pairs = undirected((0L until 49999L).map(i => (2 * i, 2 * i + 1)))
+    val below = pairs.union(Seq((0L, 0L)).toDF("src", "dst"))       // 99,999 rows
+    val at = pairs.union(undirected(Seq((200000L, 200001L))))        // 100,000 rows
+    assert(below.count() == 2 * Components.RowsPerPartition - 1)
+    assert(at.count() == 2 * Components.RowsPerPartition)
+    val driver = Components.minLabel(below)
+    val loop = Components.minLabel(at)
+    assert(onDriver(driver))
+    assert(!onDriver(loop))
+    val expect = (0L until 49999L).flatMap(i => Seq((2 * i, 2 * i), (2 * i + 1, 2 * i))).toSet
+    assert(labelSet(driver) == expect)
+    assert(labelSet(loop) == expect ++ Set((200000L, 200000L), (200001L, 200000L)))
   }
 }

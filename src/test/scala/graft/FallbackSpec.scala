@@ -8,20 +8,6 @@ package graft
   * bit-identical sorted rows. */
 class FallbackSpec extends GraftSpec {
 
-  test("geoGridDbscan: distributed minLabel fallback matches the driver union-find") {
-    // sf0.01: sf0.001's point cloud is too sparse to form any dense cell,
-    // which would leave both paths trivially empty
-    val dir = "/root/testdata/sf0.01"
-    val fold = graft.queries.GeoQueries
-      .geoGridDbscanImpl(spark, dir, bound = 100000L)
-      .collect().map(_.toSeq).sortBy(_.toString)
-    val dist = graft.queries.GeoQueries
-      .geoGridDbscanImpl(spark, dir, bound = 0L)
-      .collect().map(_.toSeq).sortBy(_.toString)
-    assert(dist.nonEmpty, "fallback produced no clusters")
-    assert(fold.toSeq == dist.toSeq)
-  }
-
   test("tsLttbDownsample: distributed windowed-bucket form matches the driver fold") {
     val fold = graft.queries.TimeSeries
       .tsLttbDownsampleImpl(spark, sfDir, bound = 200000L)
