@@ -28,11 +28,11 @@ object Bench {
     * swallowed, it would only resurface as one-off work (memo builds,
     * session and codegen start-up) inside a timed query row — a slower
     * row, not a visible failure. */
-  private[graft] def warmUp(family: String)(body: => Unit): Double = {
+  private[graft] def warmUp(name: String)(body: => Unit): Double = {
     val t0 = System.nanoTime()
     try body
     catch { case e: Exception =>
-      throw new IllegalStateException(s"$family family memo warm-up failed: $e", e)
+      throw new IllegalStateException(s"$name warm-up failed: $e", e)
     }
     (System.nanoTime() - t0) / 1e9
   }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge.materialize
 import graft.tables.Tables.t
 
 /** Graph operators over data-derived edge sets (SURVEY §2.B graph_*
@@ -30,14 +31,13 @@ object GraphQueries {
     * `Bench` calls this before its timed passes, no graded query
     * carries the one-off shared-derivation cost, so per-query timings
     * stop depending on alphabetical run order as the family grows.
-    * Covers the DataFrame-valued kinds (count() forces the lazy
-    * cache() builds) and the loop-driving builds (eager internally);
-    * `prAdjLoop` warms with its owning query — it is private to the
-    * pagerank loop and bounded by it. */
+    * Every kind materializes at build; `prAdjLoop` warms with its
+    * owning query — it is private to the pagerank loop and bounded by
+    * it. */
   private[graft] def warmFamily(s: SparkSession, dir: String): Unit = {
-    symAdj(s, dir).count()
+    symAdj(s, dir)
     symNodeCount(s, dir)
-    symDeg(s, dir).count()
+    symDeg(s, dir)
     saltedSymAdj(s, dir)
     saltedSymAdjBfs(s, dir)
     lpaLabels(s, dir)
@@ -48,94 +48,30 @@ object GraphQueries {
     // attribution discipline). louvainTrace subsumes louvainL1.
     louvainTrace(s, dir)
     hIndexShared(s, dir)
-    landmarkReach(s, dir).count()
+    landmarkReach(s, dir)
     uniformWalkVisits(s, dir)
     node2vecWalkShared(s, dir)
   }
 
-  /** localCheckpoint(eager) + GraftCaches registration + STATS-RESET
-    * view (round-15 scale find): `localCheckpoint` truncates the plan
-    * but COPIES the source plan's computed statistics onto the
-    * LogicalRDD, so a loop whose round joins its checkpointed
-    * predecessor j times compounds the sizeInBytes BigInt VALUE round
-    * over round (~ s^(j^r)). The Louvain sweep references its labeling
-    * in ~5 join branches per sweep; by dendrogram level 3 the stat
-    * carried 140 MILLION bits and the stats visitor's BigInt
-    * multiplications dominated the driver (measured: 92 s to PLAN one
-    * sweep of a 26-super-node graph at sf0.001 — pure planning, zero
-    * data). The fresh view restarts every round from default leaf
-    * stats; the checkpointed frame itself stays registered for
-    * release. Same fix the 32-round BPE loop shipped
-    * (`Bridge.freshStatsView`); the sweeps here are bounded (4/level,
-    * 4 levels) so the old form merely CRAWLED instead of hanging —
-    * but quadratically worse with every level the dendrogram adds. */
-  /** [[ckptFresh]] plus ONE observed metric collected off the SAME
-    * eager checkpoint job (round 16): a sweep loop's continuation count
-    * previously ran as its own action per sweep — `Dataset.observe`'s
-    * CollectMetrics fires on the eager localCheckpoint action
-    * (verified by `ProbeObs`), so the count rides the job the loop
-    * already pays for. */
-  private def ckptFreshCounted(df: DataFrame, metric: org.apache.spark.sql.Column)
-      : (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val v = ckptFresh(df.observe(obs, metric.as("m")))
-    (v, obs.get.apply("m").asInstanceOf[Number].longValue)
-  }
-
-  private def ckptFresh(df: DataFrame): DataFrame =
-    // measured leaf stats off the checkpoint's block-manager blocks
-    // (round 16): the loop's joins over these frames keep their static
-    // broadcast decisions — default-stats leaves planned sort-merge-
-    // first and paid AQE repair exchanges per sweep — while the k^r
-    // origin-stats compounding stays discarded (the measured size is a
-    // constant, not a product of upstream derived stats)
-    org.apache.spark.sql.graftbridge.Bridge.measuredCkptView(
-      graft.operators.GraftCaches.register(df.localCheckpoint(true)))
-
-  /** persist + materialize + tiny-plan view (round-15): like
-    * [[ckptFresh]] this hands consumers a LogicalRDD-rooted frame whose
-    * plan is a few nodes (the source's multi-MB logical plan — the
-    * 12-round h-index chain formats to 8.1 MB — is otherwise re-run
-    * through analysis/optimization by EVERY consumer action, ~3.5 s of
-    * pure driver time per readout), but the blocks live in the
-    * CacheManager (plain persist), so `releaseCaches()` actually frees
-    * them — `Dataset.unpersist` cannot drop localCheckpoint's RDD-level
-    * blocks (they wait for the ContextCleaner instead, which
-    * `ReleaseCachesSpec` rightly rejects for memo-held frames). The
-    * view reads the cached physical RDD; after release it rebuilds from
-    * lineage like any cached frame. */
-  private def persistView(df: DataFrame): DataFrame = {
-    val p = graft.operators.GraftCaches.register(df.persist())
-    p.count()
-    // measured leaf stats (round 16): consumers keep static broadcast
-    // decisions over the view — a default-stats leaf planned every
-    // consumer join sort-merge-first and left AQE to repair it at
-    // runtime, an extra exchange pair per join per action
-    org.apache.spark.sql.graftbridge.Bridge.measuredStatsView(p)
-  }
-
-  /** Shared symmetric adjacency (both edge directions), persisted and
-    * served as a stats-fresh VIEW (round 16): consumers reference the
-    * adjacency 3–12× per plan, and through a bare `.cache()` each
-    * reference re-inlines the full simEdges lineage into the consumer's
-    * logical plan — `graph_jaccard_neighbors` formatted to 744 KB,
+  /** Shared symmetric adjacency (both edge directions), materialized
+    * (round 16): consumers reference the adjacency 3–12× per plan, and
+    * through a bare `.cache()` each reference re-inlines the full
+    * simEdges lineage into the consumer's logical plan —
+    * `graph_jaccard_neighbors` formatted to 744 KB,
     * `graph_louvain_one_level` to 572 KB, `graph_pagerank_converged` to
-    * 2.1 MB of plan text, all re-analyzed per action. The view is a
-    * one-node LogicalRDD; runtime join sizing is AQE's job. The
-    * persisted source stays the release handle (`persistView` registers
-    * it with GraftCaches). `private[graft]` so
-    * `CoreSessionIsolationSpec` can hand the real family cache to
+    * 2.1 MB of plan text, all re-analyzed per action. `private[graft]`
+    * so `CoreSessionIsolationSpec` can hand the real family cache to
     * `hIndexEstimates` directly. */
   private[graft] def symAdj(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "symAdj") {
       val e = simEdges(s, dir)
-      persistView(e.union(e.select(col("v").as("u"), col("u").as("v"))))
+      materialize(e.union(e.select(col("v").as("u"), col("u").as("v"))))
     }
 
-  /** Shared node set of the similarity graph, persisted view. */
+  /** Shared node set of the similarity graph, materialized. */
   private def symNodes(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "symNodes") {
-      persistView(symAdj(s, dir).select(col("u").as("node")).distinct())
+      materialize(symAdj(s, dir).select(col("u").as("node")).distinct())
     }
 
   /** |symNodes|, counted once per session: `graph_k_core`'s peel bound. */
@@ -383,23 +319,23 @@ object GraphQueries {
     * graded SF (occupancy ≤10). */
   private def simEdges(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "simEdges") {
-      persistView(simEdgesCapped(t(s, dir, "documents").filter(col("doc_id") < 1200),
+      materialize(simEdgesCapped(t(s, dir, "documents").filter(col("doc_id") < 1200),
         graft.operators.HotKeys.DefaultCap))
     }
 
-  /** Shared degree census over the symmetric adjacency, persisted view
+  /** Shared degree census over the symmetric adjacency, materialized
     * (consumers attach degrees on BOTH join sides plus the tot/2m
     * censuses — 4 lineage copies per moves plan before round 16). */
   private def symDeg(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "symDeg") {
-      persistView(symAdj(s, dir).groupBy("u").agg(count(lit(1)).as("deg")))
+      materialize(symAdj(s, dir).groupBy("u").agg(count(lit(1)).as("deg")))
     }
 
   /** Shared 3-round LPA labels (see `graphLabelPropagation` for the
     * algorithm) — `graph_modularity` scores exactly these communities,
-    * so both queries read one computation. The final labels cache is
-    * materialized eagerly and the intermediate round caches dropped —
-    * the loop's per-round caches otherwise outlive the build. */
+    * so both queries read one computation. Only the final labels are
+    * materialized: they feed modularity, the Louvain moves chain and the
+    * trace, which would otherwise each re-plan the 3-round lineage. */
   private def lpaLabels(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "lpaLabels") {
       import org.apache.spark.sql.expressions.Window
@@ -408,20 +344,14 @@ object GraphQueries {
       for (_ <- 1 to 3) {
         // each round references the previous labels exactly ONCE
         // (propagate → count → window): linear lineage, so no per-round
-        // cache is needed — only the FINAL labels persist (and
-        // materialize eagerly: modularity reads them too)
+        // cache is needed
         val nb = sadj.propagate(lab)
         val cnt = nb.groupBy("node", "label").agg(count(lit(1)).as("c"))
         val w = Window.partitionBy("node").orderBy(col("c").desc, col("label"))
         lab = cnt.withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1).select("node", "label")
       }
-      lab = graft.operators.GraftCaches.register(lab.cache())
-      lab.count()
-      // tiny-plan view (round-15): the 3-round loop lineage is re-run
-      // through the planner by every consumer action otherwise — LPA
-      // labels feed modularity, the Louvain moves chain and the trace
-      org.apache.spark.sql.graftbridge.Bridge.freshStatsView(lab)
+      materialize(lab)
     }
 
   /** simEdges body with an injectable block cap (HotKeySpec plants a
@@ -793,10 +723,25 @@ object GraphQueries {
     * from the shared per-sweep labelings — the q censuses stay
     * per-query (cheap, statically planned). Returns (per-sweep steps:
     * (sweep, n_moved, labeling-after-sweep), converged); step 0 is the
-    * LPA seed. Labelings are localCheckpoint(true) frames registered
-    * with `GraftCaches`; `releaseCaches()` clears the memo in the same
-    * call that unpersists them, so no stale entry can serve an
-    * unrecoverable frame. */
+    * LPA seed. Labelings are checkpoints (`materialize(checkpoint =
+    * true)`), which release does not free: the memo entry holds them
+    * until `releaseCaches()` clears it, and the ContextCleaner reclaims
+    * the blocks once no frame references them. */
+  /** One FUSED sweep step (round 16): the moves argmax `(node, c)` and
+    * the label update ride ONE checkpoint job, and the move count is read
+    * off that job with `Dataset.observe` instead of a second action.
+    * Returns the new labeling and the number of nodes that moved. */
+  private def sweepStep(lab: DataFrame, moves: DataFrame): (DataFrame, Long) = {
+    val obs = org.apache.spark.sql.Observation()
+    val next = materialize(
+      lab.join(moves.select(col("node"), col("c").as("to_c")), Seq("node"), "left")
+        .select(col("node"), coalesce(col("to_c"), col("label")).as("label"),
+          col("to_c").isNotNull.as("moved"))
+        .observe(obs, coalesce(sum(when(col("moved"), 1L)), lit(0L)).as("m")),
+      checkpoint = true)
+    (next.select("node", "label"), obs.get("m").asInstanceOf[Number].longValue)
+  }
+
   private def louvainL1(s: SparkSession, dir: String): (Seq[(Int, Long, DataFrame)], Boolean) =
     memoized(s, dir, "louvainL1") {
       val maxSweeps = 4
@@ -806,22 +751,10 @@ object GraphQueries {
       var zeroMoves = false
       while (!zeroMoves && sweep < maxSweeps) {
         sweep += 1
-        // FUSED sweep step (round 16): the moves argmax and the label
-        // update ride ONE eagerly-checkpointed plan — the new labeling
-        // carries a `moved` flag, and the continuation count reads the
-        // checkpointed frame (no shuffle, no second eager action)
-        // instead of a separately checkpointed moves frame. One eager
-        // action per sweep instead of two; labels and move counts are
-        // bit-identical (same argmax moves, same left join).
-        val moves = louvainMovesFor(s, dir, lab).select(col("node"), col("c").as("to_c"))
-        val (lab2, n) = ckptFreshCounted(
-          lab.join(moves, Seq("node"), "left")
-            .select(col("node"), coalesce(col("to_c"), col("label")).as("label"),
-              col("to_c").isNotNull.as("moved")),
-          coalesce(sum(when(col("moved"), 1L)), lit(0L)))
+        val (lab2, n) = sweepStep(lab, louvainMovesFor(s, dir, lab))
         if (n == 0L) { zeroMoves = true; steps += ((sweep, 0L, lab)) }
         else {
-          lab = lab2.select("node", "label")
+          lab = lab2
           steps += ((sweep, n, lab))
         }
       }
@@ -855,15 +788,14 @@ object GraphQueries {
     var reached = frontier
     val layers = scala.collection.mutable.ArrayBuffer[DataFrame](frontier)
     for (_ <- 1 to hops) {
-      val nxt = graft.operators.GraftCaches.register(
+      val nxt = materialize(
         adj.join(frontier.withColumnRenamed("node", "u"), "u")
           .groupBy(col("v").as("node"), col("lm"))
           .agg(sum("sigma").as("sigma"))
-          .join(reached.select("node", "lm"), Seq("node", "lm"), "left_anti")
-          .localCheckpoint(true))
+          .join(reached.select("node", "lm"), Seq("node", "lm"), "left_anti"),
+        checkpoint = true)
       layers += nxt
-      reached = graft.operators.GraftCaches.register(
-        reached.unionByName(nxt).localCheckpoint(true))
+      reached = materialize(reached.unionByName(nxt), checkpoint = true)
       frontier = nxt
     }
     // backward: δ = 0 at the horizon layer, accumulate inward
@@ -880,12 +812,12 @@ object GraphQueries {
           call_function("div",
             col("sigma") * (lit(1000000L) + col("dw")), col("sw")).as("t"))
         .groupBy("node", "lm").agg(sum("t").as("delta_micro"))
-      delta = graft.operators.GraftCaches.register(
+      delta = materialize(
         layers(d).select("node", "lm")
           .join(terms, Seq("node", "lm"), "left")
           .select(col("node"), col("lm"),
-            coalesce(col("delta_micro"), lit(0L)).as("delta_micro"))
-          .localCheckpoint(true))
+            coalesce(col("delta_micro"), lit(0L)).as("delta_micro")),
+        checkpoint = true)
       perLayer += delta
     }
     perLayer.reduce(_ unionByName _)
@@ -983,10 +915,8 @@ object GraphQueries {
     * labeling-after-sweep) steps — step 0 is `lab0` — plus the terminal
     * labeling, converged flag and total move count. The per-sweep Q
     * censuses are NOT built here (round 16): `fusedLevelTrace` rolls
-    * them all into one sweep-tagged pass per level. Each sweep is ONE
-    * eager checkpoint (moves argmax + label update fused, `moved` flag
-    * carried) and one cheap count over the checkpointed frame — the
-    * louvainL1 fusion, on weighted adjacency. */
+    * them all into one sweep-tagged pass per level. Each sweep is one
+    * `sweepStep` — the louvainL1 fusion, on weighted adjacency. */
   private def louvainLevelSteps(adjW: DataFrame, degN: DataFrame, lab0: DataFrame,
       maxSweeps: Int): (Seq[(Int, Long, DataFrame)], DataFrame, Boolean, Long) = {
     var lab = lab0
@@ -996,17 +926,11 @@ object GraphQueries {
     var totalMoves = 0L
     while (!zeroMoves && sweep < maxSweeps) {
       sweep += 1
-      val moves = louvainMovesWeightedOn(adjW, lab, degN)
-        .select(col("node"), col("c").as("to_c"))
-      val (lab2, n) = ckptFreshCounted(
-        lab.join(moves, Seq("node"), "left")
-          .select(col("node"), coalesce(col("to_c"), col("label")).as("label"),
-            col("to_c").isNotNull.as("moved")),
-        coalesce(sum(when(col("moved"), 1L)), lit(0L)))
+      val (lab2, n) = sweepStep(lab, louvainMovesWeightedOn(adjW, lab, degN))
       totalMoves += n
       if (n == 0L) { zeroMoves = true; steps += ((sweep, 0L, lab)) }
       else {
-        lab = lab2.select("node", "label")
+        lab = lab2
         steps += ((sweep, n, lab))
       }
     }
@@ -1087,7 +1011,7 @@ object GraphQueries {
     * Each query previously re-executed its own per-sweep Q censuses
     * over the full adjacency (~5 two-join passes per query per bench
     * pass) plus, for the deeper pair, the contraction and sweep loops.
-    * The trace is ≤ ~20 rows, eagerly checkpointed, so the readouts are
+    * The trace is ≤ ~20 rows, materialized, so the readouts are
     * O(1); outputs are bit-identical (pinned by the oracle rows). */
   private[graft] def louvainTrace(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "louvainTrace") {
@@ -1128,11 +1052,12 @@ object GraphQueries {
         var movedLastLevel = true
         while (movedLastLevel && level < maxLevels) {
           level += 1
-          val cadj = ckptFresh(
+          val cadj = materialize(
             curAdj.join(curLab.select(col("node").as("u"), col("label").as("cu")), "u")
               .join(curLab.select(col("node").as("v"), col("label").as("cv")), "v")
               .groupBy(col("cu").as("u"), col("cv").as("v"))
-              .agg(sum("w").as("w")))
+              .agg(sum("w").as("w")),
+            checkpoint = true)
           val cdeg = cadj.groupBy(col("u").as("node")).agg(sum("w").as("deg"))
           val cl0 = cdeg.select(col("node"), col("node").as("label"))
           val (st, lab, conv, moves) = louvainLevelSteps(cadj, cdeg, cl0, 4)
@@ -1141,7 +1066,7 @@ object GraphQueries {
           curLab = lab
           movedLastLevel = moves > 0L
         }
-        persistView(trace.reduce(_ union _))
+        materialize(trace.reduce(_ union _))
       } finally {
         conf.set("spark.sql.adaptive.enabled", aqe0)
         conf.set("spark.sql.shuffle.partitions", sp0)
@@ -1324,26 +1249,15 @@ object GraphQueries {
     * `louvainL1` family-memo discipline). */
   private def hIndexShared(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     memoized(s, dir, "hIndex12") {
-      // the chain references the adjacency 12× — `symAdj` is served as
-      // a one-node measured-stats view (round 16), so the child
-      // session's temp view no longer inlines 12 copies of the
-      // simEdges lineage per action (measured: straight chain
-      // 5.7→4.8 s cold at sf0.1).
+      // the chain references the adjacency 12× — `symAdj` is
+      // materialized, so the child session's temp view no longer
+      // inlines 12 copies of the simEdges lineage per action
+      // (measured: straight chain 5.7→4.8 s cold at sf0.1).
       // chain width derived from the measured edge count (round 16 —
       // the loopWidth policy; the old constant 8 was a local-mode tune)
       val w = math.max(1L,
         symAdj(s, dir).count() / graft.operators.Components.RowsPerPartition).toInt
-      val (prev, fin) = hIndexEstimates(symAdj(s, dir), 12, width = w)
-      // TRUNCATE the consumer-visible lineage: the persisted frames
-      // carry the full 12-round join chain as their logical plan
-      // (measured 8.1 MB of formatted plan text at sf0.1), and every
-      // consumer action re-ran analysis/optimization over that tree
-      // even though execution read the cache — ~3.5 s/readout of pure
-      // driver-side planning. The views' plans are a LogicalRDD over
-      // the cached physical RDD; the persisted sources (registered
-      // inside hIndexEstimates) stay the release handles.
-      (org.apache.spark.sql.graftbridge.Bridge.freshStatsView(prev),
-        org.apache.spark.sql.graftbridge.Bridge.freshStatsView(fin))
+      hIndexEstimates(symAdj(s, dir), 12, width = w)
     }
 
   def graphCoreDecomposition(s: SparkSession, dir: String): DataFrame = {
@@ -1433,14 +1347,15 @@ object GraphQueries {
 
   /** The synchronous h-index iteration (engine core of
     * `graph_core_full` and `graph_core_decomposition`): returns the
-    * persisted round-(R−1) and round-R estimate frames, the latter
-    * eagerly materialized. Estimates start at degree; each round
-    * becomes the h-index of the neighbors' estimates.
+    * round-(R−1) and round-R estimate frames, both materialized.
+    * Estimates start at degree; each round becomes the h-index of the
+    * neighbors' estimates.
     *
     * The eager materialization runs with AQE off and the loop width
     * floored (the graphPagerankConverged discipline): the R-round chain
-    * is then ONE statically-planned job instead of ~3R per-exchange
-    * adaptive re-plans — measured 3.5 → 1.5 s warm at sf0.1. Safe on
+    * is then two statically-planned jobs (rounds 1..R−1, then round R
+    * over them) instead of ~3R per-exchange adaptive re-plans — measured
+    * 3.5 → 1.5 s warm at sf0.1. Safe on
     * results: the h-index is a function of each node's neighbor-
     * estimate MULTISET (rank ties carry equal ce values), so the
     * integer estimates are partitioning-invariant.
@@ -1497,10 +1412,10 @@ object GraphQueries {
         }
       val est0 = adj.groupBy(col("u").as("node"))
         .agg(count(lit(1)).as("est"))
-      val prev = graft.operators.GraftCaches.register(chain(est0, rounds - 1).persist())
-      val fin = graft.operators.GraftCaches.register(hRound(prev).persist())
-      floored(fin.count())
-      (prev, fin)
+      floored {
+        val prev = materialize(chain(est0, rounds - 1))
+        (prev, materialize(hRound(prev)))
+      }
     } finally {
       parent.catalog.dropGlobalTempView(vname)
     }
@@ -1553,7 +1468,7 @@ object GraphQueries {
     * Scale: each step is one adjacency equi-join + a per-walker top-1
     * window over that walker's CURRENT neighborhood (degree-bounded by
     * the family's HotKeys cap); walker state is one row each. Steps
-    * localCheckpoint eagerly — the step body references its
+    * are checkpointed (`materialize`) — the step body references its
     * predecessor twice (extend + census union), the k^r logical-plan
     * growth the BPE loop taught (docs/PLANS.md). */
   def graphRandomWalk(s: SparkSession, dir: String): DataFrame =
@@ -1579,16 +1494,17 @@ object GraphQueries {
     val adj = symAdj(s, dir)
     var cur = symNodes(s, dir).filter(col("node") % 17 === 0)
       .select(col("node").as("walker"), col("node"))
-    var acc = cur.withColumn("step", lit(0L)).localCheckpoint(true)
+    var acc = materialize(cur.withColumn("step", lit(0L)), checkpoint = true)
     for (t <- 1 to 4) {
       val w = Window.partitionBy("walker").orderBy("h", "v")
-      cur = cur.join(adj.withColumnRenamed("u", "node"), "node")
-        .select(col("walker"), col("v"),
-          md5(concat_ws(":", col("walker"), lit(t), col("v"))).as("h"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("walker"), col("v").as("node"))
-        .localCheckpoint(true)
+      cur = materialize(
+        cur.join(adj.withColumnRenamed("u", "node"), "node")
+          .select(col("walker"), col("v"),
+            md5(concat_ws(":", col("walker"), lit(t), col("v"))).as("h"))
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1)
+          .select(col("walker"), col("v").as("node")),
+        checkpoint = true)
       acc = acc.union(cur.withColumn("step", lit(t.toLong)))
     }
     acc
@@ -1665,7 +1581,7 @@ object GraphQueries {
     * ONE (prev, v) equi-join against the edge list for the distance-1
     * marker (output candidate-linear), and two per-walker windows
     * (cumulative weight + top-1) over each walker's degree-bounded
-    * neighborhood. Steps localCheckpoint eagerly — the step body is
+    * neighborhood. Steps are checkpointed (`materialize`) — the step body is
     * multiply-referenced (extend + census union), the k^r lineage rule
     * (docs/PLANS.md). */
   def graphNode2vecBiased(s: SparkSession, dir: String): DataFrame =
@@ -1689,28 +1605,28 @@ object GraphQueries {
     // first step degenerates to the uniform draw, as node2vec defines)
     var cur = starts
       .select(col("node").as("walker"), col("node").as("prev"), col("node"))
-    var acc = cur.select(col("walker"), col("node"))
-      .withColumn("step", lit(0L)).localCheckpoint(true)
+    var acc = materialize(
+      cur.select(col("walker"), col("node")).withColumn("step", lit(0L)), checkpoint = true)
     for (t <- 1 to steps) {
       val byWalker = Window.partitionBy("walker").orderBy("v")
       val cum = byWalker.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val drawn = cur.join(adj.withColumnRenamed("u", "node"), "node")
-        .join(nbr, col("prev") === col("p_u") && col("v") === col("p_v"), "left")
-        .withColumn("wt",
-          when(col("v") === col("prev"), lit(1L))       // return, 1/p ×4
-            .when(col("is_nbr").isNotNull, lit(4L))     // distance 1 ×4
-            .otherwise(lit(2L)))                        // distance 2, 1/q ×4
-        .withColumn("cw", sum("wt").over(cum))
-        .withColumn("tot", sum("wt").over(Window.partitionBy("walker")))
-        .withColumn("r",
-          conv(substring(md5(concat_ws(":", col("walker"), lit(t), lit("n2v"))), 1, 15), 16, 10)
-            .cast("long") % col("tot"))
-        .filter(col("cw") > col("r"))
-        .withColumn("rn", row_number().over(byWalker))
-        .filter(col("rn") === 1)
-        .select(col("walker"), col("node").as("prev"), col("v").as("node"))
-        .localCheckpoint(true)
-      cur = drawn
+      cur = materialize(
+        cur.join(adj.withColumnRenamed("u", "node"), "node")
+          .join(nbr, col("prev") === col("p_u") && col("v") === col("p_v"), "left")
+          .withColumn("wt",
+            when(col("v") === col("prev"), lit(1L))       // return, 1/p ×4
+              .when(col("is_nbr").isNotNull, lit(4L))     // distance 1 ×4
+              .otherwise(lit(2L)))                        // distance 2, 1/q ×4
+          .withColumn("cw", sum("wt").over(cum))
+          .withColumn("tot", sum("wt").over(Window.partitionBy("walker")))
+          .withColumn("r",
+            conv(substring(md5(concat_ws(":", col("walker"), lit(t), lit("n2v"))), 1, 15), 16, 10)
+              .cast("long") % col("tot"))
+          .filter(col("cw") > col("r"))
+          .withColumn("rn", row_number().over(byWalker))
+          .filter(col("rn") === 1)
+          .select(col("walker"), col("node").as("prev"), col("v").as("node")),
+        checkpoint = true)
       acc = acc.union(cur.select(col("walker"), col("node")).withColumn("step", lit(t.toLong)))
     }
     acc
@@ -1758,8 +1674,7 @@ object GraphQueries {
     * this identical multi-source BFS; the 4-round propagate over the
     * salted adjacency now runs once per session instead of once per
     * consumer (round-15 optimization; the `symAdj` family-memo
-    * discipline). Cached lazily — the first consumer's action
-    * materializes it. */
+    * discipline). */
   private def landmarkReach(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "landmarkReach") {
       val sadj = saltedSymAdjBfs(s, dir)
@@ -1770,11 +1685,10 @@ object GraphQueries {
           .select(col("node"), col("lm"), (col("dist") + col("w")).as("dist"))
           .groupBy("node", "lm").agg(min("dist").as("dist"))
       }
-      // persist + tiny-plan view, not lazy persist: the 4-round
-      // propagate's logical plan is ~840 KB of formatted text and each
-      // consumer action would re-plan it (driver-side) even on cache
-      // hits; persistView keeps the blocks releasable
-      persistView(reach)
+      // materialized, not lazily persisted: the 4-round propagate's
+      // logical plan is ~840 KB of formatted text and each consumer
+      // action would re-plan it (driver-side) even on cache hits
+      materialize(reach)
     }
 
   def graphEffectiveDiameter(s: SparkSession, dir: String): DataFrame = {

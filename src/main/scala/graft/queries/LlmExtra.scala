@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.tables.Tables.t
 import graft.llm.{Lsh, SimHash, Winnowing}
 import graft.operators.GraftCaches
+import org.apache.spark.sql.graftbridge.Bridge.materialize
 
 /** Extended LLM-training-data-pipeline operators beyond SURVEY's original
   * §2.B set: the remaining dedup family (SimHash, exact n-gram Jaccard,
@@ -554,6 +555,9 @@ object LlmExtra {
   require(hnswSweepConfigs.contains((graft.llm.Hnsw.B, graft.llm.Hnsw.R)),
     s"Hnsw defaults (${graft.llm.Hnsw.B},${graft.llm.Hnsw.R}) not in hnswSweepConfigs")
 
+  /** The HNSW search's probes: embeddings `vec_id < HnswProbes`. */
+  private val HnswProbes = 10
+
   /** The (session, dir)-memoized config-tagged search readout over the
     * shared navigable graph — `llm_sim_hnsw_topk` IS the (4,2) slice of
     * the sweep `llm_sim_hnsw_tune` aggregates (the same prefix
@@ -572,7 +576,7 @@ object LlmExtra {
       // frames are partitioning-invariant). Conf restored in finally.
       val conf = s.conf
       val sp0 = conf.get("spark.sql.shuffle.partitions", "32")
-      val bound = 10L * hnswSweepConfigs.map(_._1).max *
+      val bound = HnswProbes.toLong * hnswSweepConfigs.map(_._1).max *
         graft.llm.Hnsw.M * hnswSweepConfigs.size
       val w = math.max(1L, bound / graft.operators.Components.RowsPerPartition)
       try {
@@ -686,7 +690,7 @@ object LlmExtra {
       emb: DataFrame, edges: DataFrame, configs: Seq[(Int, Int)]): DataFrame = {
     import s.implicits._
     val cfg = broadcast(configs.toDF("b", "r"))
-    val probes = emb.filter(col("vec_id") < 10)
+    val probes = emb.filter(col("vec_id") < HnswProbes)
       .select(col("vec_id").as("pid"), col("v").as("pv"), col("nrm").as("pnorm"))
     // score a (b, r, pid, nid) candidate set against the probe vectors
     def scoreCands(c: DataFrame): DataFrame = c
@@ -696,10 +700,10 @@ object LlmExtra {
         round(graft.llm.Vectors.cosineWithNorms(
           graft.llm.Vectors.fdot(col("pv"), col("v")), col("pnorm"), col("nrm")), 4).as("cos"))
     // self-entry: the query node's own adjacency list, once per config
-    val entries = edges.filter(col("u") < 10)
+    val entries = edges.filter(col("u") < HnswProbes)
       .select(col("u").as("pid"), col("n").as("nid"))
       .crossJoin(cfg)
-    var visited = scoreCands(entries).localCheckpoint(true)
+    var visited = materialize(scoreCands(entries), checkpoint = true)
     val wBeam = Window.partitionBy("b", "r", "pid").orderBy(desc("cos"), asc("nid"))
     def beamOf(v: DataFrame): DataFrame =
       v.withColumn("rn", row_number().over(wBeam))
@@ -715,7 +719,7 @@ object LlmExtra {
         .distinct()
         .join(visited.select("b", "r", "pid", "nid"),
           Seq("b", "r", "pid", "nid"), "left_anti")
-      visited = visited.unionByName(scoreCands(expand)).localCheckpoint(true)
+      visited = materialize(visited.unionByName(scoreCands(expand)), checkpoint = true)
       frontier = beamOf(visited)
     }
     // grade against brute-force truth at depth 10 (shared total order;
@@ -1732,25 +1736,23 @@ object LlmExtra {
     * AND the final word state (the training vocab fully tokenized under
     * every learned merge) — `llm_bpe_vocab_apply` reads the state
     * directly instead of re-applying 32 merges it just computed. The
-    * returned frame is localCheckpoint-backed; the caller owns its
-    * release. */
+    * returned frame is a checkpoint, or the persisted initial state if
+    * no round merged; the caller owns its release. */
   private[graft] def bpeTrainFullOnWords(s: SparkSession, words: DataFrame, rounds: Int)
       : (Seq[(Long, String, Long)], DataFrame) = {
-    // vStore: the physical (persisted/checkpointed) frame — the thing
-    // unpersist releases. v: what the next round PLANS against — a
-    // stats-reset VIEW of vStore (Bridge.freshStatsView), because the
-    // merge step joins its predecessor 3× and localCheckpoint copies
-    // computed stats forward: without the reset the sizeInBytes VALUE
-    // compounds ≈ s^(3^r) and BigInt stats arithmetic dominates
-    // planning from ~round 10 (the deep-merge lesson, round 11).
+    // Each round's state is a checkpoint (`materialize`), planned
+    // against as a one-node view: the merge step references its input
+    // ~4× (m, kept×2, the anti-join), so a cached-but-lineage-carrying
+    // chain grows the LOGICAL plan ~4^r — Catalyst analysis alone
+    // measured 78 s by round 6 on a 31-word vocab.
     // Per-round cost is FLAT in r (measured ~0.5 s/round at sf0.1 for
     // both the 6- and 32-round loops — pure driver planning + job
     // round-trips over the vocab-bounded frames; AQE already coalesces
     // the tiny exchanges, and an experimental shuffle-width floor
     // bought nothing). 32 rounds ≈ 5.2× the 6-round train: exactly
     // linear in rounds, which is the property that matters at depth.
-    var vStore = bpeInitWords(words).persist()
-    var v: DataFrame = vStore
+    val init = bpeInitWords(words).persist()
+    var v: DataFrame = init
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     for (r <- 1 to rounds) {
       val wSeq = Window.partitionBy("w").orderBy("i")
@@ -1766,20 +1768,12 @@ object LlmExtra {
         val pair = best(0).getString(0)
         val Array(x, y) = pair.split(" ", 2)
         merges += ((r.toLong, pair, best(0).getLong(1)))
-        // eager localCheckpoint, NOT persist+count: the merge step
-        // references its input ~4× (m, kept×2, the anti-join), so a
-        // cached-but-lineage-carrying chain grows the LOGICAL plan ~4^r
-        // — Catalyst analysis alone measured 78 s by round 6 on a
-        // 31-word vocab. Checkpointing truncates each round's plan to
-        // a block scan (the Components.minLabel discipline), making
-        // round cost flat in r.
-        val ck = bpeMergeStep(v, x, y).localCheckpoint(true)
-        vStore.unpersist(blocking = false)
-        vStore = ck
-        v = org.apache.spark.sql.graftbridge.Bridge.freshStatsView(ck)
+        val next = materialize(bpeMergeStep(v, x, y), checkpoint = true)
+        if (v eq init) init.unpersist(blocking = false)
+        v = next
       }
     }
-    (merges.toSeq, vStore)
+    (merges.toSeq, v)
   }
 
   /** Initial BPE word state: distinct words with corpus frequency and a

@@ -746,7 +746,6 @@ object Relational {
     * the oracle is the constant-folded static mirror. */
   def sqlScripting(s: SparkSession, dir: String): DataFrame = {
     t(s, dir, "lineitem").createOrReplaceTempView("graft_li_script")
-    s.conf.set("spark.sql.scripting.enabled", "true")
     s.sql("""
       BEGIN
         DECLARE thr DOUBLE DEFAULT 10.0;

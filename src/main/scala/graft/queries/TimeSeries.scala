@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge.materialize
 import graft.tables.Tables.t
 
 /** Time-series resampling operators (SURVEY §2.B ts_* rows): the
@@ -620,23 +621,24 @@ object TimeSeries {
       .agg(max_by(col("cslot"), col("score")).as("sel"))
     // slot-map per bucket: arr[j] = selected slot given prev slot j
     // (null where bucket k-1 has fewer than 3 points — never probed)
-    var g = trans.groupBy("k")
+    var g = materialize(trans.groupBy("k")
       .agg(map_from_arrays(collect_list("pslot"), collect_list("sel")).as("m"))
       .select(col("k"),
-        transform(sequence(lit(0L), lit(2L)), j => element_at(col("m"), j)).as("arr"))
-      .localCheckpoint()
+        transform(sequence(lit(0L), lit(2L)), j => element_at(col("m"), j)).as("arr")),
+      checkpoint = true)
     // Hillis–Steele prefix composition: after round r, arr at k maps
     // the slot state before bucket max(1, k-2^r+1) to the state at k
     var span = 1L
     val nInterior = maxB - 1
     while (span < nInterior) {
       val partner = g.select((col("k") + span).as("k"), col("arr").as("parr"))
-      g = g.join(partner, Seq("k"), "left")
-        .select(col("k"),
-          when(col("parr").isNull, col("arr"))
-            .otherwise(transform(col("parr"),
-              x => element_at(col("arr"), (x + 1L).cast("int")))).as("arr"))
-        .localCheckpoint()
+      g = materialize(
+        g.join(partner, Seq("k"), "left")
+          .select(col("k"),
+            when(col("parr").isNull, col("arr"))
+              .otherwise(transform(col("parr"),
+                x => element_at(col("arr"), (x + 1L).cast("int")))).as("arr")),
+        checkpoint = true)
       span *= 2
     }
     // bucket 0 pins point i=1 at slot 0, so prefix[0] IS the selection

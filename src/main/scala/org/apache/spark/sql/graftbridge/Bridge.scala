@@ -1,83 +1,68 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.classic.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** `Dataset.ofRows` is `private[sql]`; this one-method bridge lives in an
-  * `org.apache.spark.sql` subpackage solely to lift a custom LogicalPlan
-  * into the public DataFrame API (the standard technique for Spark-native
-  * libraries that add whole operators — nothing else from the private
-  * surface is touched). */
+/** `Dataset.ofRows` is `private[sql]`; this bridge lives in an
+  * `org.apache.spark.sql` subpackage to lift a custom LogicalPlan into
+  * the public DataFrame API (the standard technique for Spark-native
+  * libraries that add whole operators), to serve materialized frames as
+  * one-node views, and to expose the extension builders to specs. */
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(spark, plan)
 
-  /** Stats-resetting view over an (already-checkpointed) frame -- the
-    * k^r lineage lesson's SEQUEL: `Dataset.localCheckpoint` truncates
-    * the logical PLAN but copies the source plan's computed STATISTICS
-    * onto the LogicalRDD (`LogicalRDD.fromDataset` originStats). A loop
-    * whose round joins its checkpointed predecessor j times then
-    * compounds the sizeInBytes VALUE round over round (~ s^(j^r)): by
-    * round ~10 the BigInt carries millions of digits and the stats
-    * visitor's multiplications dominate planning (measured: 32-round
-    * BPE never finished round 12; with this reset, flat). Re-wrapping
-    * the checkpointed RDD in a fresh LogicalRDD WITHOUT originStats
-    * restarts every round from default leaf stats. The caller keeps
-    * the checkpointed source frame for unpersist -- this view reads its
-    * blocks but cannot release them. */
-  def freshStatsView(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  /** Materializes `df` now and returns a one-node `LogicalRDD` view over
+    * its blocks, whose leaf statistics are the MEASURED size of those
+    * blocks. The one way query code materializes a frame mid-build.
+    *
+    * Why a view: a materialized frame still carries its whole logical
+    * plan (a 12-round h-index chain formats to 8.1 MB), and every
+    * consumer action re-runs analysis and optimization over it even when
+    * execution only reads the blocks. The view's plan is one node.
+    *
+    * Why measured stats: `localCheckpoint` copies the source plan's
+    * computed statistics onto its leaf, so a loop whose round joins its
+    * checkpointed predecessor k times compounds the sizeInBytes value
+    * ≈ s^(k^r) — the 32-round BPE loop froze in BigInt stats arithmetic
+    * near round 12. Default leaf stats avoid that but read as "huge" and
+    * push every consumer join to sort-merge until AQE repairs it at
+    * runtime. A measured size is a fixed constant, so it neither
+    * compounds nor hides a small frame from the static broadcast rule.
+    *
+    * `checkpoint = false`: persist (registered with
+    * [[graft.operators.GraftCaches]], so `SparkEntry.releaseCaches()`
+    * frees it) and count; the size is the CacheManager's. After release
+    * the view rebuilds from lineage like any cached frame. For memo
+    * values, which must stay releasable.
+    *
+    * `checkpoint = true`: eager `localCheckpoint`, which truncates the
+    * lineage — for loop rounds. The size is the block manager's (default
+    * stats if the storage info is missing, e.g. evicted blocks); the
+    * checkpoint's partitioning and ordering are kept. Checkpoints are NOT
+    * registered: `Dataset.unpersist` only drops CacheManager entries, so
+    * release would do nothing to them, and the registry's reference would
+    * only keep the ContextCleaner from reclaiming the blocks once the
+    * last frame over them is gone. */
+  def materialize(df: org.apache.spark.sql.DataFrame,
+      checkpoint: Boolean = false): org.apache.spark.sql.DataFrame = {
     val cdf = df.asInstanceOf[DataFrame]
-    val qe = cdf.queryExecution
-    val plan = org.apache.spark.sql.execution.LogicalRDD(
-      qe.analyzed.output, qe.toRdd)(cdf.sparkSession)
-    org.apache.spark.sql.classic.Dataset.ofRows(cdf.sparkSession, plan)
-  }
-
-  /** Like [[freshStatsView]], but the one-node view carries the
-    * MEASURED size of the (already persisted and materialized) source
-    * as its leaf statistics — so consumers keep their static broadcast
-    * decisions (a default-stats leaf reads as "huge" and pushes every
-    * join to sort-merge until AQE repairs it at runtime, one extra
-    * exchange pair per join; measured round 16 on the Brandes layer
-    * loop: 1.6 → 3.9 s from exactly that). Safe against the k^r stats
-    * compounding freshStatsView exists for: the leaf value is a FIXED
-    * measured constant, not a product of upstream derived stats. Call
-    * only after the source frame is materialized (count()), or the
-    * cache size read here is an estimate. */
-  def measuredStatsView(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val cdf = df.asInstanceOf[DataFrame]
-    val qe = cdf.queryExecution
-    val measured = org.apache.spark.sql.catalyst.plans.logical.Statistics(
-      sizeInBytes = qe.withCachedData.stats.sizeInBytes)
-    val plan = org.apache.spark.sql.execution.LogicalRDD(
-      qe.analyzed.output, qe.toRdd)(cdf.sparkSession, Some(measured), None)
-    org.apache.spark.sql.classic.Dataset.ofRows(cdf.sparkSession, plan)
-  }
-
-  /** [[measuredStatsView]] for an eagerly `localCheckpoint(true)`-ed
-    * frame: the real size comes from the BLOCK MANAGER (the checkpoint
-    * RDD's cached blocks), not the CacheManager — localCheckpoint blocks
-    * never enter the CacheManager, so `withCachedData.stats` would read
-    * the ORIGIN stats localCheckpoint copied, which is exactly the
-    * compounding k^r value freshStatsView exists to discard. Falls back
-    * to default leaf stats when the storage info is missing (e.g. the
-    * blocks were evicted before the view was built), and when the frame
-    * is not itself a checkpoint: a plan that merely CONTAINS one (a join
-    * over a checkpoint) is larger or smaller than that checkpoint's
-    * blocks, so their size would be a wrong leaf statistic. */
-  def measuredCkptView(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val cdf = df.asInstanceOf[DataFrame]
-    val qe = cdf.queryExecution
     val session = cdf.sparkSession
-    val measured = (qe.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        session.sparkContext.getRDDStorageInfo.find(_.id == lr.rdd.id)
-      case _ => None
-    }).map(i => org.apache.spark.sql.catalyst.plans.logical.Statistics(
-      sizeInBytes = BigInt(i.memSize + i.diskSize).max(1)))
-    val plan = org.apache.spark.sql.execution.LogicalRDD(
-      qe.analyzed.output, qe.toRdd)(session, measured, None)
-    org.apache.spark.sql.classic.Dataset.ofRows(session, plan)
+    val view = if (checkpoint) {
+      val lr = cdf.localCheckpoint(true).queryExecution.analyzed.asInstanceOf[LogicalRDD]
+      val measured = session.sparkContext.getRDDStorageInfo.find(_.id == lr.rdd.id)
+        .map(i => Statistics(sizeInBytes = BigInt(i.memSize + i.diskSize).max(1)))
+      lr.copy()(session, measured, None)
+    } else {
+      val p = cdf.persist()
+      graft.operators.GraftCaches.register(p)
+      p.count()
+      val qe = p.queryExecution
+      LogicalRDD(qe.analyzed.output, qe.toRdd)(
+        session, Some(Statistics(sizeInBytes = qe.withCachedData.stats.sizeInBytes)), None)
+    }
+    ofRows(session, view)
   }
 
   /** Test-only introspection of a SparkSessionExtensions instance (the

@@ -6,7 +6,7 @@ class BenchSpec extends org.scalatest.funsuite.AnyFunSuite {
     val e = intercept[IllegalStateException] {
       Bench.warmUp("graph")(throw new RuntimeException("boom"))
     }
-    assert(e.getMessage.startsWith("graph family memo warm-up failed"), e.getMessage)
+    assert(e.getMessage.startsWith("graph warm-up failed"), e.getMessage)
     assert(e.getCause.getMessage == "boom")
   }
 }

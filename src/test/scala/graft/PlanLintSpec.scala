@@ -132,19 +132,31 @@ class PlanLintSpec extends GraftSpec {
   private val directTableRead =
     """(?s)(\.parquet|format\(\s*"parquet"\s*\)(\s*\.\w+\([^()]*\))*\s*\.load)\(\s*s"\$\{?dir\b""".r
 
+  /** (file name, text) of every source under `graft/queries`. */
+  private def querySources: Seq[(String, String)] = {
+    val srcDir = new java.io.File("src/main/scala/graft/queries")
+    val files = Option(srcDir.listFiles).toSeq.flatten.filter(_.getName.endsWith(".scala"))
+    assert(files.nonEmpty, s"no query sources under ${srcDir.getAbsolutePath}")
+    files.map(f => (f.getName, java.nio.file.Files.readString(f.toPath)))
+  }
+
   test("no query reads a testdata table without Tables.t") {
     assert(directTableRead.findFirstIn("""s.read.parquet(s"$dir/orders.parquet")""").isDefined)
     assert(directTableRead.findFirstIn(
       "s.read.format(\"parquet\")\n  .option(\"a\", \"b\")\n  .load(s\"${dir}/part.parquet\")").isDefined)
     assert(directTableRead.findFirstIn("""s.read.parquet(path)""").isEmpty)
-    val srcDir = new java.io.File("src/main/scala/graft/queries")
-    val sources = Option(srcDir.listFiles).toSeq.flatten.filter(_.getName.endsWith(".scala"))
-    assert(sources.nonEmpty, s"no query sources under ${srcDir.getAbsolutePath}")
-    val offenders = sources.filter { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try directTableRead.findFirstIn(src.mkString).isDefined finally src.close()
-    }.map(_.getName)
+    val offenders = querySources.collect {
+      case (name, src) if directTableRead.findFirstIn(src).isDefined => name
+    }
     assert(offenders.isEmpty, s"direct testdata parquet reads (use Tables.t): ${offenders.mkString(", ")}")
+  }
+
+  test("no query materializes a frame except through Bridge.materialize") {
+    val offenders = querySources.collect {
+      case (name, src) if src.contains("localCheckpoint(") || src.contains("LogicalRDD(") => name
+    }
+    assert(offenders.isEmpty,
+      s"bare localCheckpoint or LogicalRDD (use Bridge.materialize): ${offenders.mkString(", ")}")
   }
 
   test("no session memo outside operators.SessionMemo") {
