@@ -3,22 +3,24 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Hub-salted adjacency for iterative graph loops (pagerank, label
-  * propagation, BFS) — the `Components.minLabel` power-law hardening
-  * factored out so every Pregel-shaped loop in the engine shares it.
+/** Hub-salted adjacency for iterative graph loops — the one power-law
+  * hardening every Pregel-shaped loop in the engine shares: connected
+  * components (`Components.labelLoop`), pagerank, label propagation (LPA)
+  * and BFS.
   *
-  * All three loops run the same round shape: `adj(u, v) ⋈ values(node,
+  * All four loops run the same round shape: `adj(u, v) ⋈ values(node,
   * payload…)` on `u === node`, emitting `(v, payload…)` rows the caller
-  * aggregates (sum for pagerank, min for BFS, majority-count for LPA —
-  * all algebraic, so map-side partial aggregation collapses fan-in
-  * before the wire). The scale hazard is the JOIN side: a hash
-  * partitioning on `u` lands a hub's ENTIRE adjacency in one shuffle
-  * partition, so the per-round join inherits a task as large as the
-  * biggest hub no matter how many executors exist — and AQE skew-split
-  * cannot help because the adjacency is CACHED pre-partitioned (no
-  * fresh shuffle for OptimizeSkewedJoin to re-split).
+  * aggregates (min for components and BFS, sum for pagerank,
+  * majority-count for LPA — all algebraic, so map-side partial
+  * aggregation collapses fan-in before the wire). The scale hazard is
+  * the JOIN side: a hash partitioning on `u` lands a hub's ENTIRE
+  * adjacency in one shuffle partition, so the per-round join inherits a
+  * task as large as the biggest hub no matter how many executors exist
+  * — and AQE skew-split cannot help because the adjacency is CACHED
+  * pre-partitioned (no fresh shuffle for OptimizeSkewedJoin to
+  * re-split).
   *
-  * Mitigation (identical to `Components.minLabel`): a one-off degree
+  * Mitigation: a one-off degree
   * census finds nodes above `hotDegree`; hot-`u` edges get a
   * deterministic salt from `hash(v)` (no rand() — results must be
   * partition-count-invariant) and the cache is partitioned on
@@ -37,10 +39,10 @@ import org.apache.spark.sql.functions._
 final class SaltedAdj private (
     private[graft] val edges: DataFrame,
     hot: DataFrame,
-    degs: DataFrame,
+    private[graft] val degs: DataFrame,
     salts: Int,
     private[graft] val useSalt: Boolean,
-    width: Int) {
+    private[graft] val width: Int) {
 
   /** One propagation round: rows `(node ← v, payload…, edge extras…)`
     * for every edge `(u, v)` whose `u` matched a `values(node, payload…)`
@@ -86,13 +88,24 @@ final class SaltedAdj private (
 
 object SaltedAdj {
 
+  /** Degree threshold above which a node counts as a hub and its edges
+    * get salted. High enough that organic near-dup groups never trigger
+    * it; low enough that a power-law tail is spread well before a single
+    * reducer saturates. */
+  val DefaultHotDegree = 100000L
+
+  /** Salt fan-out for hub adjacencies: a hub's rows spread over this
+    * many reducers; the values side replicates each HOT node this many
+    * times per round (cold nodes are untouched). */
+  val DefaultSalts = 16
+
   /** Build the salted, cached adjacency from `adj(u, v)` (undirected
     * graphs pass both directions). Materializes the cache (one census
     * pass + one count). */
   def apply(
       adj0: DataFrame,
-      hotDegree: Long = Components.DefaultHotDegree,
-      salts: Int = Components.DefaultSalts): SaltedAdj = {
+      hotDegree: Long = DefaultHotDegree,
+      salts: Int = DefaultSalts): SaltedAdj = {
     val adj = adj0.cache()
     // ONE census aggregation yields everything the setup needs: total
     // edge rows (Σ degree → loop width) and the max degree (hub
@@ -106,20 +119,18 @@ object SaltedAdj {
       coalesce(sum("_d"), lit(0L)), coalesce(max("_d"), lit(0L))).head
     val n = stats.getLong(0)
     val useSalt = stats.getLong(1) > hotDegree
-    val width = Components.loopWidth(
-      adj0.sparkSession.sparkContext.defaultParallelism, n)
+    val width = Components.loopWidth(n)
     val hot = degs.filter(col("_d") > hotDegree).select("node")
     // Pre-partitioning the cached adjacency at loop width (so the
     // per-round join never re-exchanges the big side) costs a second
     // cache round-trip + one more job. That trade only pays when the
     // edge list is big enough for per-round exchanges to dominate —
-    // below one RowsPerPartition per core the whole frame re-shuffles
-    // in milliseconds and the fixed setup cost would dwarf the rounds
+    // below one RowsPerPartition the whole frame re-shuffles in
+    // milliseconds and the fixed setup cost would dwarf the rounds
     // (measured ~2 s of pure overhead per graded graph query at toy
     // SF). Salted graphs always take the full path: the (u, _salt)
     // layout is what spreads a hub, and a graph with hubs is big.
-    val prePartition = useSalt ||
-      n >= Components.RowsPerPartition * math.max(1, width)
+    val prePartition = useSalt || n >= Components.RowsPerPartition
     val edges =
       if (useSalt)
         adj.join(broadcast(hot.select(col("node").as("u"), lit(1).as("_hot"))),

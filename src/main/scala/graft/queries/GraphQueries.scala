@@ -156,8 +156,8 @@ object GraphQueries {
     * first (inert at graded SF: blocks run 1..10). The per-round
     * edges⋈rank join is hub-salted via SaltedAdj (power-law tails put a
     * hub's whole adjacency in one reducer otherwise; census finds no
-    * hubs at graded SF → zero-overhead path). Every persist registers
-    * with `GraftCaches` (the returned plans reference them lazily). */
+    * hubs at graded SF → zero-overhead path). Both caches register with
+    * `GraftCaches` (the returned plans reference them). */
   private def prGraph(s: SparkSession, dir: String)
       : (graft.operators.SaltedAdj, DataFrame, DataFrame) = {
     val docs = t(s, dir, "documents")
@@ -173,9 +173,11 @@ object GraphQueries {
           Seq("source", "blk"))
         .filter(col("u") =!= col("v"))
         .select("u", "v"))
-    val deg = graft.operators.GraftCaches.register(
-      sadj.edges.groupBy("u").agg(count(lit(1)).as("deg"))
-        .withColumnRenamed("u", "node").persist())
+    // materialized now: three round joins and the final join read it
+    // from independent stages of one job, which a lazy persist let
+    // compute the same blocks concurrently
+    val deg = materialize(sadj.edges.groupBy("u").agg(count(lit(1)).as("deg"))
+      .withColumnRenamed("u", "node"))
     (sadj.registered(), deg, docs.select("node"))
   }
 

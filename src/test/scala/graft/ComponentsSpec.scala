@@ -8,10 +8,10 @@ import graft.operators.Components
 
 /** operators.Components: the driver union-find, the distributed
   * min-label fixpoint with lineage checkpointing, and the dispatch
-  * between them. The loop tests call `labelLoop` directly: their
-  * fixtures are far below the dispatch cut, so `minLabel` would label
-  * them on the driver. The path graph is the adversarial diameter case —
-  * one label must crawl the whole chain, forcing enough rounds to cross
+  * between them, and the loop's cache lifecycle. The loop tests call
+  * `labelLoop` directly: their fixtures are far below the dispatch cut,
+  * so `minLabel` would label them on the driver. The path graph is the
+  * adversarial diameter case — one label must crawl the whole chain, forcing enough rounds to cross
   * several localCheckpoint boundaries (the llm_dedup_components corpus
   * data converges in 2-3 rounds and never would). */
 class ComponentsSpec extends GraftSpec {
@@ -30,6 +30,9 @@ class ComponentsSpec extends GraftSpec {
     df.queryExecution.analyzed.isInstanceOf[LocalRelation]
 
   private val star = (1L to 20000L).map(h => (0L, h))
+  // disjoint pairs converge in one fold, so the loop side stays cheap
+  private def pairsFixture = undirected((0L until 49999L).map(i => (2 * i, 2 * i + 1)))
+  private def atCutFixture = pairsFixture.union(undirected(Seq((200000L, 200001L))))
   private val hubFixture = star ++ (30000L until 30005L).map(i => (i, i + 1)) ++
     Seq((40000L, 40001L))
   private val pathFixture = (1L until 12L).map(i => (i, i + 1))
@@ -60,32 +63,6 @@ class ComponentsSpec extends GraftSpec {
     assert(byLabel == Map(0L -> 20001, 30000L -> 6, 40000L -> 2))
   }
 
-  test("hub salting spreads a hot adjacency across the salt space") {
-    // distribution pin on the salting transform itself: with the hub in
-    // the hot set and 8 salts, no (dst, _salt) group may retain more
-    // than a small multiple of degree/salts — the quantity that bounds
-    // the per-reducer row count once the cache partitions on (dst, _salt)
-    import SparkSpecBase.spark.implicits._
-    val deg = star.size
-    val edges = undirected(star)
-    val hot = Seq(0L).toDF("node")
-    val salts = 8
-    val groups = Components.saltEdges(edges, hot, salts)
-      .filter(col("dst") === 0L)
-      .groupBy("dst", "_salt").agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getLong(1), r.getLong(2)))
-    assert(groups.length == salts, s"hub must span all $salts salts: ${groups.toSeq}")
-    val maxGroup = groups.map(_._2).max
-    assert(maxGroup <= deg / salts * 3 / 2,
-      s"hub salt groups unbalanced: max $maxGroup of $deg rows")
-    // cold dst keys (the leaves, degree 1 each) stay on salt 0 — the
-    // labels side only replicates HOT nodes
-    val coldSalts = Components.saltEdges(edges, hot, salts)
-      .filter(col("dst") =!= 0L).select("_salt").distinct()
-      .as[Long].collect().toSet
-    assert(coldSalts == Set(0L))
-  }
-
   test("checkpoint interval does not change the fixpoint") {
     // two chains + one isolated pair; aggressive interval (every round)
     // vs effectively-never must agree exactly
@@ -104,15 +81,14 @@ class ComponentsSpec extends GraftSpec {
     // core-count task waves measured as inverse CPU scaling on the
     // fixpoint loops; work per partition is bounded by RowsPerPartition
     // so a narrow width is per-task trivial by construction)
-    assert(Components.loopWidth(32, 300L) == 1)
-    assert(Components.loopWidth(1000, 300L) == 1)
+    assert(Components.loopWidth(300L) == 1)
     // growth: width tracks measured edges — a billion-edge graph gets
     // ~20k partitions (≈50k rows each), where the old min(200, …) cap
     // left 5M-row partitions
-    assert(Components.loopWidth(32, 1_000_000_000L) == 20000)
-    assert(Components.loopWidth(1000, 100_000_000L) == 2000)
+    assert(Components.loopWidth(1_000_000_000L) == 20000)
+    assert(Components.loopWidth(100_000_000L) == 2000)
     // degenerate inputs stay sane
-    assert(Components.loopWidth(0, 0L) == 1)
+    assert(Components.loopWidth(0L) == 1)
   }
 
   test("minLabel on an EMPTY edge set returns empty instead of throwing") {
@@ -157,10 +133,8 @@ class ComponentsSpec extends GraftSpec {
 
   test("dispatch: 99,999 edge rows take the driver path, 100,000 take the loop") {
     import SparkSpecBase.spark.implicits._
-    // disjoint pairs converge in one fold, so the loop side stays cheap
-    val pairs = undirected((0L until 49999L).map(i => (2 * i, 2 * i + 1)))
-    val below = pairs.union(Seq((0L, 0L)).toDF("src", "dst"))       // 99,999 rows
-    val at = pairs.union(undirected(Seq((200000L, 200001L))))        // 100,000 rows
+    val below = pairsFixture.union(Seq((0L, 0L)).toDF("src", "dst")) // 99,999 rows
+    val at = atCutFixture                                            // 100,000 rows
     assert(below.count() == 2 * Components.RowsPerPartition - 1)
     assert(at.count() == 2 * Components.RowsPerPartition)
     val driver = Components.minLabel(below)
@@ -170,5 +144,24 @@ class ComponentsSpec extends GraftSpec {
     val expect = (0L until 49999L).flatMap(i => Seq((2 * i, 2 * i), (2 * i + 1, 2 * i))).toSet
     assert(labelSet(driver) == expect)
     assert(labelSet(loop) == expect ++ Set((200000L, 200000L), (200001L, 200000L)))
+  }
+
+  test("releaseCaches frees every loop cache; only checkpoints stay") {
+    graft.SparkEntry.releaseCaches()
+    def persisted = spark.sparkContext.getPersistentRDDs
+    val before = persisted.keySet.toSet
+    // the dispatch fixture ends on a cache batch (it converges at fold
+    // 2); the salted hub fixture crosses a checkpoint on its way
+    val dispatch = Components.minLabel(atCutFixture)
+    val hub = Components.labelLoop(undirected(hubFixture), hotDegree = 1000L, salts = 8)
+    val want = (labelSet(dispatch), labelSet(hub))
+    assert(!onDriver(dispatch))
+    assert(graft.operators.GraftCaches.size >= 1, "the final cache batch is not registered")
+    graft.SparkEntry.releaseCaches()
+    val leaked = persisted.filter { case (id, rdd) => !before(id) && !rdd.isCheckpointed }
+    assert(leaked.isEmpty, s"loop caches survived release: ${leaked.keys}")
+    // released frames recompute from lineage to the same labels
+    assert((labelSet(dispatch), labelSet(hub)) == want)
+    graft.SparkEntry.releaseCaches()
   }
 }

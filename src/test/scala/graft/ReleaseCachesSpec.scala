@@ -23,11 +23,10 @@ class ReleaseCachesSpec extends GraftSpec {
     // persists (modularity's census, jaccard's capped adjacency). Every
     // memo value reaches release only through GraftCaches, so a kind
     // that skips registration at build leaks here. graphComponents
-    // stays OUT of the leak window: above its driver cut minLabel returns a
-    // localCheckpoint-backed frame whose lineage is truncated — unpersisting
-    // it would make the data unrecoverable, so it is deliberately not
-    // release-managed (its own loop caches are unpersisted inside
-    // labelLoop; ComponentsSpec covers that lifecycle).
+    // stays OUT of the leak window: at spec scale minLabel labels it on
+    // the driver. Above the driver cut the loop frees its own caches,
+    // registers a final cache batch, and leaves a final localCheckpoint
+    // unregistered; ComponentsSpec's release test covers that lifecycle.
     val kcore = graft.queries.GraphQueries.graphKCore(spark, sfDir).collect()
     val decomp = graft.queries.GraphQueries.graphCoreDecomposition(spark, sfDir).collect()
     graft.queries.GraphQueries.graphJaccardNeighbors(spark, sfDir).collect()

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.SaltedAdj
 
-/** Adversarial hub tests for the shared graph-loop salting (round-8
-  * hardening: pagerank/LPA/BFS per-round joins reuse the Components
-  * hub discipline via SaltedAdj). A star hub whose degree dwarfs the
+/** Adversarial hub tests for the shared graph-loop salting (the
+  * components, pagerank, LPA and BFS per-round joins all run on
+  * SaltedAdj). A star hub whose degree dwarfs the
   * threshold must (a) spread across the salt space in the cached
   * adjacency — the bounded-per-task guarantee, since each (u, _salt)
   * group is what one reducer sees — and (b) produce EXACTLY the same
@@ -23,14 +23,16 @@ class SaltedAdjSpec extends GraftSpec {
   test("hub adjacency spreads across the salt space; cold edges ride salt 0") {
     val sadj = SaltedAdj(starAdj, hotDegree = 50L, salts = 8)
     assert(sadj.useSalt)
-    // the hub's 400 edge rows must occupy >1 salt (bounded per-task
-    // input: each (u, _salt) partition group sees ≤ degree/salts-ish)
-    val hubSalts = sadj.edges.filter(col("u") === 0L)
-      .select("_salt").distinct().as[Long].collect().toSet
-    assert(hubSalts.size > 1, s"hub rows landed on salts $hubSalts")
-    val maxPerSalt = sadj.edges.filter(col("u") === 0L)
-      .groupBy("_salt").count().agg(max("count")).as[Long].head()
-    assert(maxPerSalt < 400L, "salting did not split the hub's adjacency")
+    // the hub's 400 edge rows must occupy every salt, and no (u, _salt)
+    // group — what one reducer sees — may hold more than 1.5 × its
+    // degree/salts share
+    val (deg, salts) = (400L, 8)
+    val groups = sadj.edges.filter(col("u") === 0L)
+      .groupBy("_salt").count().as[(Long, Long)].collect()
+    assert(groups.length == salts, s"hub must span all $salts salts: ${groups.toSeq}")
+    val maxPerSalt = groups.map(_._2).max
+    assert(maxPerSalt <= deg / salts * 3 / 2,
+      s"hub salt groups unbalanced: max $maxPerSalt of $deg rows")
     // cold nodes must not pay the salt fan-out
     val coldSalts = sadj.edges.filter(col("u") === 1000L || col("u") === 1001L)
       .select("_salt").distinct().as[Long].collect().toSet
@@ -60,9 +62,9 @@ class SaltedAdjSpec extends GraftSpec {
 
   test("big unsalted graph takes the pre-partitioned layout at measured loop width") {
     // 300k edges with max degree 50 (no hubs): crosses the
-    // RowsPerPartition-per-core threshold, so the adjacency must be
-    // cached AT loop width on the join key — the layout the per-round
-    // join reuses without re-exchanging the big side. Small graphs
+    // RowsPerPartition threshold, so the adjacency must be cached AT
+    // loop width on the join key — the layout the per-round join reuses
+    // without re-exchanging the big side. Small graphs
     // (starAdj above) skip this; their cached partition count is
     // whatever the union produced, not the loop width.
     val spark = SparkSpecBase.spark
@@ -71,8 +73,7 @@ class SaltedAdjSpec extends GraftSpec {
       .select((col("id") / 50L).as("u"), (col("id") % 6000L + 1000000L).as("v"))
     val sadj = SaltedAdj(big, hotDegree = 100000L)
     assert(!sadj.useSalt)
-    val width = graft.operators.Components.loopWidth(
-      spark.sparkContext.defaultParallelism, 300000L)
+    val width = graft.operators.Components.loopWidth(300000L)
     assert(sadj.edges.rdd.getNumPartitions == width,
       s"cached adjacency has ${sadj.edges.rdd.getNumPartitions} partitions, want $width")
     sadj.unpersist()
