@@ -30,7 +30,7 @@ import org.apache.spark.sql.SparkSession
   *     file version);
   *   - graph family (`queries.GraphQueries`): `simEdges`, `symAdj`,
   *     `symNodes`, `symNodeCount`, `symDeg`, `saltedSymAdj`,
-  *     `saltedSymAdjBfs`, `lpaLabels`, `prAdjLoop`, `louvainL1`,
+  *     `saltedSymAdjBfs`, `lpaLabels`, `prAdjLoop`,
   *     `louvainTrace`, `hIndex12`, `uniformWalk`, `node2vecWalk`,
   *     `landmarkReach`;
   *   - LLM/ANN family: `minhashSigs`, `annTruth10` (`queries.Llm`),

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge.materialize
+import org.apache.spark.sql.graftbridge.Bridge.{inSession, materialize, withConfs}
 import graft.tables.Tables.t
 
 /** Graph operators over data-derived edge sets (SURVEY §2.B graph_*
@@ -45,7 +45,7 @@ object GraphQueries {
     // by ≥ 2 graded queries): warming them keeps the shared-derivation
     // cost VISIBLE in memo_build/memo_warm_sec instead of aliased onto
     // whichever consumer runs first (the round-14 verdict-task-4
-    // attribution discipline). louvainTrace subsumes louvainL1.
+    // attribution discipline).
     louvainTrace(s, dir)
     hIndexShared(s, dir)
     landmarkReach(s, dir)
@@ -239,8 +239,8 @@ object GraphQueries {
           .cache())
     }
     // frame: (node, r = current rank, rh = array of ranks r_0..r_j)
-    def prRound(rank: DataFrame): DataFrame =
-      prAdj.join(rank.withColumnRenamed("node", "u"), "u")
+    def prRound(adj: DataFrame, rank: DataFrame): DataFrame =
+      adj.join(rank.withColumnRenamed("node", "u"), "u")
         .select(col("v"), col("deg"),
           when(col("deg") === 0L, lit(0L))
             .otherwise(call_function("div", col("r"), col("deg"))).as("c"),
@@ -263,41 +263,38 @@ object GraphQueries {
       .collect().sortBy(_.getLong(0))
     // The chain evaluates in TWO halves: damping 0.5 puts convergence
     // near round 10 at any SF, so rounds 13–24 usually never build.
-    // Both eager collects run with AQE off and the loop width floored —
-    // the 12-round chain is then ONE statically-planned job instead of
-    // ~36 per-stage re-plans, and integer sums are partitioning-
-    // invariant so the result is bit-identical (confs restored after).
-    val conf = s.conf
-    val (aqe0, sp0) = (conf.get("spark.sql.adaptive.enabled", "true"),
-      conf.get("spark.sql.shuffle.partitions", "32"))
-    var hist: DataFrame = null
-    var l1s: Array[org.apache.spark.sql.Row] = null
-    try {
-      conf.set("spark.sql.adaptive.enabled", "false")
-      conf.set("spark.sql.shuffle.partitions", "8")
-      var cur: DataFrame = nodes.select(col("node"), lit(1000000L).as("r"),
+    // Both eager collects run in a cloned session with AQE off and the
+    // width pinned — the 12-round chain is then ONE statically-planned
+    // job instead of ~36 per-stage re-plans, and integer sums are
+    // partitioning-invariant so the result is bit-identical. The history
+    // comes back planned in `s`. The width stays 8, not `loopWidth` of
+    // the adjacency rows: that reads 1 at sf0.1, and the chain's growing
+    // rank arrays then ran 1.05–1.30 s against 0.88–1.20 s at width 8
+    // (`graft.Bench`, 6 runs a side, 4-CPU host).
+    val (hist, l1s) = withConfs(s, "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> "8") { c =>
+      var cur: DataFrame = inSession(c, nodes).select(col("node"), lit(1000000L).as("r"),
         array(lit(1000000L)).as("rh"))
-      for (_ <- 1 to maxRounds / 2) cur = prRound(cur)
+      val adjC = inSession(c, prAdj)
+      for (_ <- 1 to maxRounds / 2) cur = prRound(adjC, cur)
       val half = cur.persist()
-      l1s = l1Trace(half)
-      val eps0 = 200L * l1s.head.getLong(2)
-      if (l1s.exists(_.getLong(1) <= eps0)) hist = half
+      val l1Half = l1Trace(half)
+      val eps0 = 200L * l1Half.head.getLong(2)
+      if (l1Half.exists(_.getLong(1) <= eps0)) (half, l1Half)
       else {
-        for (_ <- maxRounds / 2 + 1 to maxRounds) cur = prRound(cur)
-        hist = cur.persist()
-        l1s = l1Trace(hist)
+        for (_ <- maxRounds / 2 + 1 to maxRounds) cur = prRound(adjC, cur)
+        val full = cur.persist()
+        val l1Full = l1Trace(full)
         half.unpersist(blocking = false)
+        (full, l1Full)
       }
-    } finally {
-      conf.set("spark.sql.adaptive.enabled", aqe0)
-      conf.set("spark.sql.shuffle.partitions", sp0)
     }
     graft.operators.GraftCaches.register(hist)
     val eps = 200L * l1s.head.getLong(2)
     val hit = l1s.find(_.getLong(1) <= eps)
     val k = hit.map(_.getLong(0).toInt).getOrElse(maxRounds)
     val lastL1 = hit.map(_.getLong(1)).getOrElse(l1s.last.getLong(1))
-    val result = hist.select(col("node"),
+    val result = inSession(s, hist).select(col("node"),
       element_at(col("rh"), k + 1).as("r"))
       .join(deg, Seq("node"), "left")
       .select(col("node"), coalesce(col("deg"), lit(0L)).as("n_neighbors"),
@@ -593,13 +590,7 @@ object GraphQueries {
     * (`graphLouvainOneLevel`) and the applier (`graphLouvainApply`).
     * Columns: node, cur, c (target), deg, k_icur, k_ic, gain_scaled. */
   private[graft] def louvainMoves(s: SparkSession, dir: String): DataFrame =
-    louvainMovesFor(s, dir, lpaLabels(s, dir))
-
-  /** The sweep body against an ARBITRARY labeling — the fixpoint loop
-    * (`graphLouvainConverged`) re-runs it on each post-move partition,
-    * so the gain algebra must not be welded to the LPA seed. */
-  private[graft] def louvainMovesFor(s: SparkSession, dir: String, lab: DataFrame): DataFrame =
-    louvainMovesOn(symAdj(s, dir), lab,
+    louvainMovesOn(symAdj(s, dir), lpaLabels(s, dir),
       symDeg(s, dir).select(col("u").as("node"), col("deg")))
 
   /** The sweep body on EXPLICIT frames — shared by the (session, dir)
@@ -665,7 +656,7 @@ object GraphQueries {
   def graphLouvainApply(s: SparkSession, dir: String): DataFrame =
     // level-1 sweeps 0/1 of the family-shared dendrogram trace: sweep
     // 1's labeling IS the LPA seed with this query's argmax moves
-    // applied (louvainL1 runs the identical sweep body), so q_before /
+    // applied (level 1 runs the identical sweep body), so q_before /
     // q_after are exactly those sweeps' Q numerators, n_moved is sweep
     // 1's move count, and the verdict compares the same two BIGINTs
     // the standalone two-census form compared
@@ -708,27 +699,13 @@ object GraphQueries {
     * nothing quadratic, nothing corpus-sized on the driver. */
   def graphLouvainConverged(s: SparkSession, dir: String): DataFrame =
     // the level-1 rows of the family-shared dendrogram trace: the
-    // weighted Q census at w ≡ 1 is bit-identical to the unweighted
-    // form this replaced (sum(w) = count(1) edge for edge), and the
-    // converged flag is `louvainL1`'s zero-moves verdict in both
+    // weighted sweep and Q census at w ≡ 1 are bit-identical to the
+    // unweighted forms (sum(w) = count(1) edge for edge)
     louvainTrace(s, dir).filter(col("level") === 1)
       .select(col("sweep"), col("n_moved"), col("twom"), col("q_num"),
         col("converged"))
       .orderBy("sweep")
 
-  /** The level-1 Louvain fixpoint loop, MEMOIZED for the family (the
-    * `symAdj` discipline): `graph_louvain_converged` and
-    * `graph_louvain_two_level` both replay the identical ≤4-sweep
-    * local-move loop from the LPA seed, so the driver-action-heavy part
-    * (one bounded count per sweep on a checkpointed moves frame) runs
-    * ONCE per (session, dir) and both queries derive their readouts
-    * from the shared per-sweep labelings — the q censuses stay
-    * per-query (cheap, statically planned). Returns (per-sweep steps:
-    * (sweep, n_moved, labeling-after-sweep), converged); step 0 is the
-    * LPA seed. Labelings are checkpoints (`materialize(checkpoint =
-    * true)`), which release does not free: the memo entry holds them
-    * until `releaseCaches()` clears it, and the ContextCleaner reclaims
-    * the blocks once no frame references them. */
   /** One FUSED sweep step (round 16): the moves argmax `(node, c)` and
     * the label update ride ONE checkpoint job, and the move count is read
     * off that job with `Dataset.observe` instead of a second action.
@@ -743,25 +720,6 @@ object GraphQueries {
       checkpoint = true)
     (next.select("node", "label"), obs.get("m").asInstanceOf[Number].longValue)
   }
-
-  private def louvainL1(s: SparkSession, dir: String): (Seq[(Int, Long, DataFrame)], Boolean) =
-    memoized(s, dir, "louvainL1") {
-      val maxSweeps = 4
-      var lab = lpaLabels(s, dir)
-      val steps = scala.collection.mutable.ArrayBuffer[(Int, Long, DataFrame)]((0, 0L, lab))
-      var sweep = 0
-      var zeroMoves = false
-      while (!zeroMoves && sweep < maxSweeps) {
-        sweep += 1
-        val (lab2, n) = sweepStep(lab, louvainMovesFor(s, dir, lab))
-        if (n == 0L) { zeroMoves = true; steps += ((sweep, 0L, lab)) }
-        else {
-          lab = lab2
-          steps += ((sweep, n, lab))
-        }
-      }
-      (steps.toSeq, zeroMoves)
-    }
 
   /** LANDMARK BETWEENNESS — Brandes' dependency accumulation from the
     * landmark sample (the `graph_landmark_distance` sources, node %
@@ -918,7 +876,7 @@ object GraphQueries {
     * labeling, converged flag and total move count. The per-sweep Q
     * censuses are NOT built here (round 16): `fusedLevelTrace` rolls
     * them all into one sweep-tagged pass per level. Each sweep is one
-    * `sweepStep` — the louvainL1 fusion, on weighted adjacency. */
+    * `sweepStep`. */
   private def louvainLevelSteps(adjW: DataFrame, degN: DataFrame, lab0: DataFrame,
       maxSweeps: Int): (Seq[(Int, Long, DataFrame)], DataFrame, Boolean, Long) = {
     var lab = lab0
@@ -989,8 +947,8 @@ object GraphQueries {
     * aggregation over the previous level's adjacency — and Louvain's
     * whole scaling story is that each level SHRINKS the graph by the
     * community count, so level k ≥ 2 runs on frames orders of
-    * magnitude below the corpus (level 1 reuses the family-shared
-    * memoized sweep loop; the contraction shuffle shape is probed at
+    * magnitude below the corpus (level 1 sweeps the family-shared
+    * adjacency itself; the contraction shuffle shape is probed at
     * 26.6M edges by `ProbeGraphScale`). Driver actions stay ≤ 4 counts
     * per level, depth-capped. */
   def graphLouvainDendrogram(s: SparkSession, dir: String): DataFrame =
@@ -999,14 +957,14 @@ object GraphQueries {
   /** The (session, dir)-memoized FULL dendrogram trace (level, sweep,
     * n_moved, twom, q_num, converged) — the family's one level/sweep
     * story, from which four graded readouts derive (round-15
-    * optimization; extends the `louvainL1` memo one layer up):
+    * optimization):
     *   - `graph_louvain_dendrogram` = the whole trace;
     *   - `graph_louvain_two_level`  = the level ≤ 2 prefix (its level-2
     *     run is the dendrogram's level-2 run verbatim: same contraction,
     *     same `louvainLevelTrace(…, 2, 4)` call);
     *   - `graph_louvain_converged`  = the level-1 rows (the weighted Q
     *     census at w ≡ 1 is bit-identical to the unweighted form:
-    *     sum(w) = count, and the converged flag is `louvainL1`'s);
+    *     sum(w) = count);
     *   - `graph_louvain_apply`      = level-1 sweeps 0/1 (q_before/
     *     q_after are exactly those sweeps' Q numerators and n_moved is
     *     sweep 1's move count).
@@ -1018,38 +976,32 @@ object GraphQueries {
   private[graft] def louvainTrace(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "louvainTrace") {
       val maxLevels = 4
-      val adj1 = symAdj(s, dir).withColumn("w", lit(1L))
-      // The whole build — louvainL1's sweeps, each level's contraction,
-      // sweeps and fused census, and the final ≤20-row trace count —
-      // runs with AQE off at a shuffle width DERIVED FROM THE MEASURED
-      // EDGE COUNT (round-16, r15 verdict task 2: the sweep loop's
-      // ~25 eager tiny-frame actions paid per-stage adaptive re-plans
-      // and session-width task waves; the pagerank/hIndex floored-
-      // static discipline, but with the width a function of data, not
-      // a constant — 47k edges → 1 partition locally, a billion-edge
-      // graph → edges/RowsPerPartition). Integer algebra throughout,
-      // so every frame is partitioning-invariant; confs restored in
-      // the finally.
-      val conf = s.conf
-      val (aqe0, sp0) = (conf.get("spark.sql.adaptive.enabled", "true"),
-        conf.get("spark.sql.shuffle.partitions", "32"))
-      val loopW = math.max(1L,
-        symAdj(s, dir).count() / graft.operators.Components.RowsPerPartition)
-      try {
-        // AQE stays ON here: it was tried off both with default-stats
-        // views (+4 s — every sweep join went sort-merge) and with
-        // measured-stats views (louvainL1 2.8 → 3.9 s) — its runtime
-        // sizing earns more than its per-stage re-plan costs on these
-        // frames. Only the shuffle width is pinned to the derived loop
-        // width.
-        conf.set("spark.sql.shuffle.partitions", loopW.toString)
-        val (steps, conv1) = louvainL1(s, dir)
+      // The whole build — each level's sweeps, contraction and fused
+      // census, and the final ≤20-row trace count — runs in a cloned
+      // session at a shuffle width DERIVED FROM THE MEASURED EDGE COUNT
+      // (the sweep loop's ~25 eager tiny-frame actions paid session-width
+      // task waves otherwise; 47k edges → 1 partition locally, a
+      // billion-edge graph → edges/RowsPerPartition). AQE stays ON: it
+      // was tried off both with default-stats views (+4 s — every sweep
+      // join went sort-merge) and with measured-stats views (level 1
+      // 2.8 → 3.9 s) — its runtime sizing earns more than its per-stage
+      // re-plan costs on these frames. Integer algebra throughout, so
+      // every frame is partitioning-invariant.
+      val adj = symAdj(s, dir)
+      val deg1 = symDeg(s, dir).select(col("u").as("node"), col("deg"))
+      val lab1 = lpaLabels(s, dir)
+      withConfs(s, "spark.sql.shuffle.partitions" ->
+          graft.operators.Components.loopWidth(adj.count()).toString) { c =>
+        // level 1 is the weighted sweep at w ≡ 1 on the loop-free
+        // adjacency, which reduces bit-for-bit to the unweighted one
+        val adj1 = inSession(c, adj).withColumn("w", lit(1L))
+        val (steps, lab1End, conv1, _) =
+          louvainLevelSteps(adj1, inSession(c, deg1), inSession(c, lab1), 4)
         // per-level FUSED Q censuses (`fusedLevelTrace`): 2 adjacency
-        // shuffles per level instead of 2 × |sweeps|, every level (round
-        // 16 — round 15 fused level 1 only)
-        var trace: Seq[DataFrame] = Seq(fusedLevelTrace(s, adj1, steps, 1, conv1))
+        // shuffles per level instead of 2 × |sweeps|
+        var trace: Seq[DataFrame] = Seq(fusedLevelTrace(c, adj1, steps, 1, conv1))
         var curAdj = adj1
-        var curLab = steps.last._3
+        var curLab = lab1End
         var level = 1
         var movedLastLevel = true
         while (movedLastLevel && level < maxLevels) {
@@ -1063,15 +1015,12 @@ object GraphQueries {
           val cdeg = cadj.groupBy(col("u").as("node")).agg(sum("w").as("deg"))
           val cl0 = cdeg.select(col("node"), col("node").as("label"))
           val (st, lab, conv, moves) = louvainLevelSteps(cadj, cdeg, cl0, 4)
-          trace = trace :+ fusedLevelTrace(s, cadj, st, level, conv)
+          trace = trace :+ fusedLevelTrace(c, cadj, st, level, conv)
           curAdj = cadj
           curLab = lab
           movedLastLevel = moves > 0L
         }
-        materialize(trace.reduce(_ union _))
-      } finally {
-        conf.set("spark.sql.adaptive.enabled", aqe0)
-        conf.set("spark.sql.shuffle.partitions", sp0)
+        inSession(s, materialize(trace.reduce(_ union _)))
       }
     }
 
@@ -1247,20 +1196,9 @@ object GraphQueries {
     * `graph_core_decomposition` (k ≤ 4 truncated histogram) and
     * `graph_core_full` (full histogram) both read the identical
     * iteration; the 12-round join chain now runs once per session
-    * instead of once per consumer (round-15 optimization; the
-    * `louvainL1` family-memo discipline). */
+    * instead of once per consumer (round-15 optimization). */
   private def hIndexShared(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    memoized(s, dir, "hIndex12") {
-      // the chain references the adjacency 12× — `symAdj` is
-      // materialized, so the child session's temp view no longer
-      // inlines 12 copies of the simEdges lineage per action
-      // (measured: straight chain 5.7→4.8 s cold at sf0.1).
-      // chain width derived from the measured edge count (round 16 —
-      // the loopWidth policy; the old constant 8 was a local-mode tune)
-      val w = math.max(1L,
-        symAdj(s, dir).count() / graft.operators.Components.RowsPerPartition).toInt
-      hIndexEstimates(symAdj(s, dir), 12, width = w)
-    }
+    memoized(s, dir, "hIndex12")(hIndexEstimates(symAdj(s, dir), 12))
 
   def graphCoreDecomposition(s: SparkSession, dir: String): DataFrame = {
     val (prev, fin) = hIndexShared(s, dir)
@@ -1342,56 +1280,29 @@ object GraphQueries {
       .orderBy("core_number")
   }
 
-  /** Monotonically increasing suffix for the global-temp-view handoff
-    * below — names must not collide across invocations (or across
-    * concurrent sessions embedding the library). */
-  private val hIndexViewSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** The synchronous h-index iteration (engine core of
     * `graph_core_full` and `graph_core_decomposition`): returns the
     * round-(R−1) and round-R estimate frames, both materialized.
     * Estimates start at degree; each round becomes the h-index of the
     * neighbors' estimates.
     *
-    * The eager materialization runs with AQE off and the loop width
-    * floored (the graphPagerankConverged discipline): the R-round chain
-    * is then two statically-planned jobs (rounds 1..R−1, then round R
-    * over them) instead of ~3R per-exchange adaptive re-plans — measured
-    * 3.5 → 1.5 s warm at sf0.1. Safe on
-    * results: the h-index is a function of each node's neighbor-
-    * estimate MULTISET (rank ties carry equal ce values), so the
-    * integer estimates are partitioning-invariant.
-    *
-    * Conf isolation (round-14, closing the round-10 ADVICE hazard for
-    * real): the chain is BUILT AND COUNTED in a CHILD SESSION
-    * (`newSession()` — shared SparkContext, shared cache manager,
-    * ISOLATED SQLConf), handed the adjacency through a uniquely-named
-    * global temp view. The parent session's confs are never touched, so
-    * a query planned concurrently in the parent keeps AQE on during the
-    * materialization window (pinned by `CoreSessionIsolationSpec`). The
-    * shared `CacheManager` lives in `SharedState`, so the child's
-    * expanded view plan still picks up the family's persisted adjacency
-    * cache by canonical-plan match, and the frames persisted here are
-    * reclaimable by `SparkEntry.releaseCaches()` from any session.
-    * After the count the child's confs are reset to the parent's
-    * current values so downstream readouts over the returned frames
-    * plan exactly as the caller would. */
-  private[graft] def hIndexEstimates(adjIn: DataFrame, rounds: Int, width: Int = 8)
-      : (DataFrame, DataFrame) = {
+    * The eager materialization runs with AQE off at `loopWidth` of the
+    * adjacency rows (the graphPagerankConverged discipline): the R-round
+    * chain is then two statically-planned jobs (rounds 1..R−1, then
+    * round R over them) instead of ~3R per-exchange adaptive re-plans —
+    * measured 3.5 → 1.5 s warm at sf0.1. Safe on results: the h-index is
+    * a function of each node's neighbor-estimate MULTISET (rank ties
+    * carry equal ce values), so the integer estimates are
+    * partitioning-invariant. The chain is planned in a cloned session
+    * (`Bridge.withConfs`) and both frames come back planned in the
+    * caller's. */
+  private[graft] def hIndexEstimates(adjIn: DataFrame, rounds: Int): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    val parent = adjIn.sparkSession
-    val child = parent.newSession()
-    val vname = s"graft_hindex_adj_${hIndexViewSeq.incrementAndGet()}"
-    adjIn.createOrReplaceGlobalTempView(vname)
-    // the view-drop finally wraps EVERYTHING after view creation
-    // (round-15 ADVICE find): a failure during chain construction,
-    // persist registration or the count itself must not leak the
-    // global temp view into SharedState — unique names prevent
-    // collisions, but leaked views would accumulate across failed
-    // invocations. The conf reset stays scoped to exactly the window
-    // where the confs are flipped.
-    try {
-      val adj = child.table(s"global_temp.$vname")
+    val s = adjIn.sparkSession
+    val width = graft.operators.Components.loopWidth(adjIn.count())
+    withConfs(s, "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> width.toString) { c =>
+      val adj = inSession(c, adjIn)
       def hRound(est: DataFrame): DataFrame =
         adj.join(est.select(col("node").as("v"), col("est").as("ce")), "v")
           .select(col("u"), col("ce"))
@@ -1399,27 +1310,9 @@ object GraphQueries {
             Window.partitionBy("u").orderBy(desc("ce"))))
           .groupBy("u").agg(max(least(col("ce"), col("rn").cast("long"))).as("est"))
           .select(col("u").as("node"), col("est"))
-      def chain(from: DataFrame, n: Int): DataFrame =
-        (1 to n).foldLeft(from)((e, _) => hRound(e))
-      def floored[A](act: => A): A =
-        try {
-          child.conf.set("spark.sql.adaptive.enabled", "false")
-          child.conf.set("spark.sql.shuffle.partitions", width.toString)
-          act
-        } finally {
-          child.conf.set("spark.sql.adaptive.enabled",
-            parent.conf.get("spark.sql.adaptive.enabled", "true"))
-          child.conf.set("spark.sql.shuffle.partitions",
-            parent.conf.get("spark.sql.shuffle.partitions", "32"))
-        }
-      val est0 = adj.groupBy(col("u").as("node"))
-        .agg(count(lit(1)).as("est"))
-      floored {
-        val prev = materialize(chain(est0, rounds - 1))
-        (prev, materialize(hRound(prev)))
-      }
-    } finally {
-      parent.catalog.dropGlobalTempView(vname)
+      val est0 = adj.groupBy(col("u").as("node")).agg(count(lit(1)).as("est"))
+      val prev = materialize((1 until rounds).foldLeft(est0)((e, _) => hRound(e)))
+      (inSession(s, prev), inSession(s, materialize(hRound(prev))))
     }
   }
 
@@ -1488,7 +1381,7 @@ object GraphQueries {
     // (session, dir)-memoized: `graph_random_walk` and
     // `graph_walk_skipgram` both read the identical 4-step uniform walk
     // stream; the eager per-step checkpoint loop runs once per session
-    // (round-15 optimization; the `louvainL1` family-memo discipline).
+    // (round-15 optimization; the `louvainTrace` family-memo discipline).
     memoized(s, dir, "uniformWalk") { uniformWalkBuild(s, dir) }
 
   private def uniformWalkBuild(s: SparkSession, dir: String): DataFrame = {
@@ -1541,7 +1434,7 @@ object GraphQueries {
     * `graph_node2vec_skipgram` (training-pair census) both read the
     * identical 4-step p/q walk; the driver-action-heavy step loop (one
     * eager localCheckpoint per step) now runs once per session instead
-    * of once per consumer (round-15 optimization; the `louvainL1`
+    * of once per consumer (round-15 optimization; the `louvainTrace`
     * family-memo discipline). */
   private def node2vecWalkShared(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "node2vecWalk") {

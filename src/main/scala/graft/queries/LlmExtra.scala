@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.tables.Tables.t
 import graft.llm.{Lsh, SimHash, Winnowing}
 import graft.operators.GraftCaches
-import org.apache.spark.sql.graftbridge.Bridge.materialize
+import org.apache.spark.sql.graftbridge.Bridge.{inSession, materialize, withConfs}
 
 /** Extended LLM-training-data-pipeline operators beyond SURVEY's original
   * §2.B set: the remaining dedup family (SimHash, exact n-gram Jaccard,
@@ -538,7 +538,7 @@ object LlmExtra {
   private[graft] def simHnswTopkImpl(s: SparkSession, dir: String,
       m: Int, b: Int, r: Int): DataFrame = {
     val (emb, edges) = hnswGraph(s, dir, m)
-    hnswSearchReadoutMulti(s, dir, emb, edges, Seq((b, r)))
+    hnswSearchReadoutMulti(s, emb, edges, graft.queries.Llm.truthTop10(s, dir), Seq((b, r)))
       .select(col("pid"), col("n_visited"),
         col("n_hit_5"), col("n_hit_10"),
         col("recall_at_5"), col("recall_at_10"))
@@ -568,24 +568,22 @@ object LlmExtra {
   private def hnswReadoutShared(s: SparkSession, dir: String): DataFrame =
     graft.operators.SessionMemo.memoized(s, s"hnswReadout|$dir", "hnswReadout") {
       val (emb, edges) = hnswGraph(s, dir, graft.llm.Hnsw.M)
+      val truth = graft.queries.Llm.truthTop10(s, dir)
       // the search loop's frames are PROBE-bounded by construction
       // (≤ nProbes · B · M candidates per hop per config), so its four
-      // eager checkpoint hops run at a width derived from that bound
-      // instead of the session's corpus width (round 16 — the Louvain
-      // trace-loop discipline; integer/rounded algebra throughout, so
-      // frames are partitioning-invariant). Conf restored in finally.
-      val conf = s.conf
-      val sp0 = conf.get("spark.sql.shuffle.partitions", "32")
+      // eager checkpoint hops run in a cloned session at a width derived
+      // from that bound instead of the session's corpus width (the
+      // Louvain trace-loop discipline; integer/rounded algebra
+      // throughout, so frames are partitioning-invariant)
       val bound = HnswProbes.toLong * hnswSweepConfigs.map(_._1).max *
         graft.llm.Hnsw.M * hnswSweepConfigs.size
-      val w = math.max(1L, bound / graft.operators.Components.RowsPerPartition)
-      try {
-        conf.set("spark.sql.shuffle.partitions", w.toString)
-        val out = GraftCaches.register(
-          hnswSearchReadoutMulti(s, dir, emb, edges, hnswSweepConfigs).persist())
+      withConfs(s, "spark.sql.shuffle.partitions" ->
+          graft.operators.Components.loopWidth(bound).toString) { c =>
+        val out = GraftCaches.register(hnswSearchReadoutMulti(c,
+          inSession(c, emb), inSession(c, edges), inSession(c, truth), hnswSweepConfigs).persist())
         out.count()
-        out
-      } finally conf.set("spark.sql.shuffle.partitions", sp0)
+        inSession(s, out)
+      }
     }
 
   /** The navigable-graph BUILD (candidate rings → top-M → symmetrize),
@@ -686,8 +684,8 @@ object LlmExtra {
     * standalone search ends in, so per-config rows are bit-identical).
     * Output: one row per (b, r, probe) with visited size and exact
     * recall@5/@10 against the shared memoized truth. */
-  private def hnswSearchReadoutMulti(s: SparkSession, dir: String,
-      emb: DataFrame, edges: DataFrame, configs: Seq[(Int, Int)]): DataFrame = {
+  private def hnswSearchReadoutMulti(s: SparkSession, emb: DataFrame, edges: DataFrame,
+      truthTop10: DataFrame, configs: Seq[(Int, Int)]): DataFrame = {
     import s.implicits._
     val cfg = broadcast(configs.toDF("b", "r"))
     val probes = emb.filter(col("vec_id") < HnswProbes)
@@ -724,7 +722,7 @@ object LlmExtra {
     }
     // grade against brute-force truth at depth 10 (shared total order;
     // the family-shared memoized table — one corpus scan per session)
-    val truth = graft.queries.Llm.truthTop10(s, dir)
+    val truth = truthTop10
       .select(col("pid"), col("nid"), col("rnk").as("rt"))
       .crossJoin(cfg)
     val approx = visited.withColumn("ra", row_number().over(wBeam).cast("long"))
@@ -796,15 +794,14 @@ object LlmExtra {
   def llmKmeansTrain(s: SparkSession, dir: String): DataFrame = {
     val K = 8
     // qv (the 64× posexplode of every embedding) is read twice per
-    // Lloyd's round plus the final assignment — persist it once; cent is
-    // K×64 rows, cached per round so each broadcast doesn't re-run the
-    // whole preceding round chain
-    val qv = t(s, dir, "embeddings")
+    // Lloyd's round plus the final assignment, and the last round's cent
+    // (K×64 rows) twice by the readout — both are materialized now, since
+    // a lazy persist read from two sides of one plan let concurrent tasks
+    // compute the same blocks
+    val qv = materialize(t(s, dir, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
       .withColumn("xq", floor(col("x").cast("double") * 10000).cast("long"))
-      .select("vec_id", "pos", "xq")
-      .persist()
-    GraftCaches.register(qv)
+      .select("vec_id", "pos", "xq"))
     val dd = (col("xq") - col("cq")) * (col("xq") - col("cq"))
     var cent = qv.filter(col("vec_id") < K)
       .select(col("vec_id").as("cell"), col("pos"), col("xq").as("cq"))
@@ -814,10 +811,9 @@ object LlmExtra {
       val assign = d2.groupBy("vec_id")
         .agg(min(struct(col("d2"), col("cell"))).as("m"))
         .select(col("vec_id"), col("m.cell").as("cell"))
-      cent = GraftCaches.register(qv.join(assign, "vec_id")
+      cent = materialize(qv.join(assign, "vec_id")
         .groupBy("cell", "pos")
-        .agg(floor(sum(col("xq")) / count(lit(1))).cast("long").as("cq"))
-        .cache())
+        .agg(floor(sum(col("xq")) / count(lit(1))).cast("long").as("cq")))
     }
     val d2f = qv.join(broadcast(cent), "pos")
       .groupBy("vec_id", "cell").agg(sum(dd).as("d2"))

@@ -8,7 +8,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * `org.apache.spark.sql` subpackage to lift a custom LogicalPlan into
   * the public DataFrame API (the standard technique for Spark-native
   * libraries that add whole operators), to serve materialized frames as
-  * one-node views, and to expose the extension builders to specs. */
+  * one-node views, to plan loops in a cloned session (`cloneSession` is
+  * `private[sql]` too), and to expose the extension builders to specs. */
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(spark, plan)
@@ -64,6 +65,31 @@ object Bridge {
     }
     ofRows(session, view)
   }
+
+  /** Runs `body` in a clone of `s` that differs from it only by
+    * `overrides` — the one way query code plans a loop with its own
+    * confs (AQE off, a pinned shuffle width). The clone keeps every
+    * runtime conf, UDF and listener of `s` (unlike `newSession()`, which
+    * starts from the SparkContext conf) and shares its SparkContext and
+    * cache manager; `s` itself is never touched, so whatever else it
+    * plans meanwhile keeps its own confs. Nothing is restored: the clone
+    * is simply dropped. Frames cross with [[inSession]]: the caller's
+    * frames go in, and the body hands its results back in `s`. The body
+    * must not look up session memos with the clone (they key on the
+    * session): resolve them in `s` first and move them in. */
+  def withConfs[A](s: org.apache.spark.sql.SparkSession, overrides: (String, String)*)(
+      body: org.apache.spark.sql.SparkSession => A): A = {
+    val child = s.asInstanceOf[SparkSession].cloneSession()
+    overrides.foreach { case (k, v) => child.conf.set(k, v) }
+    child.withActive(body(child))
+  }
+
+  /** `df`'s analyzed plan as a frame of session `s`: it plans and runs
+    * with `s`'s confs and still reads every cached block `df` reads
+    * (the cache manager is shared and matches plans, not sessions). */
+  def inSession(s: org.apache.spark.sql.SparkSession,
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    ofRows(s.asInstanceOf[SparkSession], df.queryExecution.analyzed)
 
   /** Test-only introspection of a SparkSessionExtensions instance (the
     * build* methods are private[sql]): lets ExtensionsSpec assert what

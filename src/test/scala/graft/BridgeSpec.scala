@@ -54,4 +54,38 @@ class BridgeSpec extends GraftSpec {
     }
     assert(read == 0, s"reading the metric started $read jobs")
   }
+
+  test("withConfs plans in a clone of the caller; inSession moves frames in and out") {
+    val caller = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+      .map(k => k -> spark.conf.get(k))
+    val runtimeKey = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+    spark.conf.set(runtimeKey, "false")
+    try {
+      val cached = GraftCaches.register(frame.persist())
+      cached.count()
+      val back = Bridge.withConfs(spark, "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "3") { child =>
+        assert(child ne spark)
+        assert(child.conf.get(runtimeKey) == "false", "the caller's runtime conf is missing")
+        val agg = Bridge.inSession(child, cached).groupBy("k").count()
+        val plan = agg.queryExecution.executedPlan.toString
+        assert(!plan.contains("AdaptiveSparkPlan"), s"planned adaptive in the clone:\n$plan")
+        assert(plan.contains("InMemoryTableScan"), s"the caller's cache was missed:\n$plan")
+        assert(agg.queryExecution.toRdd.getNumPartitions == 3)
+        val out = GraftCaches.register(agg.persist())
+        out.count()
+        out
+      }
+      val served = Bridge.inSession(spark, back)
+      assert(served.sparkSession eq spark)
+      val plan = served.groupBy(col("k") % 2).count().queryExecution.executedPlan.toString
+      assert(plan.contains("AdaptiveSparkPlan"), s"not adaptive in the caller:\n$plan")
+      assert(plan.contains("InMemoryTableScan"), s"the clone's cache was missed:\n$plan")
+      assert(served.count() == 7L)
+      caller.foreach { case (k, v) => assert(spark.conf.get(k) == v, s"$k changed") }
+    } finally {
+      spark.conf.unset(runtimeKey)
+      SparkEntry.releaseCaches()
+    }
+  }
 }

@@ -2,18 +2,19 @@ package graft
 
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
-/** `hIndexEstimates` plans its eager 12-round materialization with AQE
-  * off and the shuffle width floored — but in a CHILD session
-  * (`newSession()`), so those planner confs must never leak into the
-  * caller's session (round-10 ADVICE hazard, closed for real in round
-  * 14). The proof is adversarial and concurrent: a sampler thread
-  * plans parent-session queries in a tight loop for the whole
-  * materialization window and asserts every single plan kept AQE on
-  * and the parent confs kept their values. If the old in-place conf
-  * flip ever returns, the window lasts a full eager count and the
-  * sampler catches it deterministically; with isolation the
-  * assertions cannot fire at any interleaving. */
+/** Four loops plan their eager materializations with their own confs —
+  * the pagerank-converged chain and the h-index chain with AQE off and a
+  * pinned width, the Louvain trace and the HNSW readout at a pinned
+  * width — each in a cloned session (`Bridge.withConfs`), so those
+  * planner confs must never leak into the caller's session. The proof
+  * is adversarial and concurrent: a sampler thread plans parent-session
+  * queries in a tight loop across all four builds and asserts every
+  * single plan kept AQE on and the parent confs kept their values. If an
+  * in-place conf flip on the shared session ever returns, its window
+  * lasts a full eager action and the sampler catches it; with isolation
+  * the assertions cannot fire at any interleaving. */
 class CoreSessionIsolationSpec extends GraftSpec {
 
   test("parent-session queries keep AQE on during the child-session materialization window") {
@@ -43,11 +44,15 @@ class CoreSessionIsolationSpec extends GraftSpec {
         samples.incrementAndGet()
       }
     }, "graft-isolation-sampler")
+    // memos dropped first, so each memoized build runs inside the window
+    SparkEntry.releaseCaches()
     sampler.start()
     try {
-      val adj = graft.queries.GraphQueries.coreFullOn(
-        graft.queries.GraphQueries.symAdj(parent, sfDir), 12)
-      adj.collect()
+      import graft.queries.{GraphQueries => G}
+      G.graphPagerankConverged(parent, sfDir).collect()
+      G.louvainTrace(parent, sfDir).collect()
+      G.coreFullOn(G.symAdj(parent, sfDir), 12).collect()
+      graft.queries.LlmExtra.llmSimHnswTune(parent, sfDir).collect()
     } finally {
       stop.set(true)
       sampler.join(10000)
@@ -70,20 +75,17 @@ class CoreSessionIsolationSpec extends GraftSpec {
     // guarantee the old InMemoryTableScan assertion encoded.
     val adj = graft.queries.GraphQueries.symAdj(spark, sfDir)
     adj.count() // materialize the family cache in the parent
-    val child = spark.newSession()
-    adj.createOrReplaceGlobalTempView("graft_isolation_probe_adj")
-    try {
-      val childAdj = child.table("global_temp.graft_isolation_probe_adj")
-      val fresh = childAdj.groupBy("u").count()
+    Bridge.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") { child =>
+      val fresh = Bridge.inSession(child, adj).groupBy("u").count()
       val p = fresh.queryExecution.executedPlan.toString
       assert(!p.contains("Scan parquet") && !p.contains("FileScan"),
         s"fresh child frame over the adjacency re-scans parquet:\n${p.take(2000)}")
       assert(p.contains("ExistingRDD") || p.contains("InMemoryTableScan"),
         s"fresh child frame lost the shared-adjacency view/cache:\n${p.take(2000)}")
-    } finally spark.catalog.dropGlobalTempView("graft_isolation_probe_adj")
-    // and the handoff itself still plans in a child session
+    }
+    // and the estimates come back served in the caller's session
     val (prevF, fin) = graft.queries.GraphQueries.hIndexEstimates(adj, 3)
-    assert(fin.sparkSession ne spark, "estimates must be planned in a child session")
+    assert(fin.sparkSession eq spark, "estimates must be served in the caller's session")
     prevF.unpersist(blocking = false)
     fin.unpersist(blocking = false)
   }

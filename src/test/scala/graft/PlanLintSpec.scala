@@ -159,6 +159,16 @@ class PlanLintSpec extends GraftSpec {
       s"bare localCheckpoint or LogicalRDD (use Bridge.materialize): ${offenders.mkString(", ")}")
   }
 
+  test("no query sets a conf on a shared session or hands frames through a global view") {
+    // a loop with its own confs runs in Bridge.withConfs' cloned session
+    val banned = Seq("conf.set(", "newSession(", "GlobalTempView")
+    val offenders = querySources.collect {
+      case (name, src) if banned.exists(src.contains) => name
+    }
+    assert(offenders.isEmpty,
+      s"conf.set, newSession or a global temp view (use Bridge.withConfs): ${offenders.mkString(", ")}")
+  }
+
   test("no session memo outside operators.SessionMemo") {
     // every hand-rolled session memo needs `isStopped` to evict the
     // entries of stopped sessions, so the call marks one

@@ -44,7 +44,7 @@ class Round13OpsSpec extends GraftSpec {
 
   /** One synchronous local-move sweep against a FROZEN labeling: every
     * node's (gain DESC, community ASC) argmax over neighboring
-    * communities, positive gains only — the engine's louvainMovesFor
+    * communities, positive gains only — the engine's louvainMovesOn
     * replayed node-at-a-time in plain Scala. */
   private def sweepMoves(adj: Map[Long, Seq[Long]], deg: Map[Long, Long],
       twom: Long, lab: Map[Long, Long]): Map[Long, Long] = {
