@@ -14,7 +14,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * would run at width 1, so no parallelism is given up — is collected
   * by one bounded read and labelled on the driver by union-find
   * (`unionFind`). On such a graph the loop is pure scheduling: every
-  * batch is several serial one-task stage jobs. The driver answer is the
+  * batch is several serial one-task stage jobs. The same bounded read
+  * (`boundedRows`) serves both `minLabel` and `GraphQueries.kPeel`, so
+  * the "fits on the driver" decision lives here. The driver answer is the
   * EXACT fixpoint at any diameter, where the loop stops at its
   * `MaxRounds` cap. Larger graphs run the distributed loop
   * (`labelLoop`) described below.
@@ -73,19 +75,27 @@ object Components {
   private[graft] def loopWidth(rows: Long): Int =
     math.max(1L, rows / RowsPerPartition).toInt
 
+  /** The rows of `df` when it has fewer than `2 · RowsPerPartition` of
+    * them, else `None` — one bounded collect that reads at most that
+    * many rows. Fewer rows is exactly a frame `loopWidth` sizes to ONE
+    * partition: a loop over it is pure scheduling, so its callers
+    * (`minLabel`, `GraphQueries.kPeel`) answer on the driver instead. */
+  private[graft] def boundedRows(df: DataFrame): Option[Array[Row]] = {
+    val cut = 2 * RowsPerPartition // the smallest row count loopWidth splits
+    val rows = df.limit(cut.toInt).collect()
+    if (rows.length < cut) Some(rows) else None
+  }
+
   /** (node, label) connected components of an UNDIRECTED edge list
     * given as both directions in `edges(src, dst)` with bigint node ids;
-    * each node's label is its component's minimum node id. One bounded
-    * collect reads at most `2 · RowsPerPartition` edge rows: fewer than
-    * that is exactly the graph `loopWidth` sizes to ONE partition, which
-    * the driver labels with [[unionFind]]; otherwise the rows are dropped
-    * and the distributed [[labelLoop]] runs. */
-  def minLabel(edges: DataFrame): DataFrame = {
-    val cut = 2 * RowsPerPartition // the smallest edge count loopWidth splits
-    val rows = edges.select("src", "dst").limit(cut.toInt).collect()
-    if (rows.length < cut) unionFind(edges.sparkSession, rows)
-    else labelLoop(edges)
-  }
+    * each node's label is its component's minimum node id. Edge rows
+    * that [[boundedRows]] returns are labelled on the driver by
+    * [[unionFind]]; otherwise the distributed [[labelLoop]] runs. */
+  def minLabel(edges: DataFrame): DataFrame =
+    boundedRows(edges.select("src", "dst")) match {
+      case Some(rows) => unionFind(edges.sparkSession, rows)
+      case None => labelLoop(edges)
+    }
 
   /** Driver-side union-find over collected (src: bigint, dst: bigint)
     * rows. `find` is iterative with path halving (a long path must not

@@ -29,8 +29,8 @@ import org.apache.spark.sql.SparkSession
   *   - `table_schema` (`tables.Tables.t`, one parquet schema per table
   *     file version);
   *   - graph family (`queries.GraphQueries`): `simEdges`, `symAdj`,
-  *     `symNodes`, `symNodeCount`, `symDeg`, `saltedSymAdj`,
-  *     `saltedSymAdjBfs`, `lpaLabels`, `prAdjLoop`,
+  *     `symNodes`, `symDeg`, `saltedSymAdj`, `saltedSymAdjBfs`,
+  *     `lpaLabels`, `prAdjLoop`,
   *     `louvainTrace`, `hIndex12`, `uniformWalk`, `node2vecWalk`,
   *     `landmarkReach`;
   *   - LLM/ANN family: `minhashSigs`, `annTruth10` (`queries.Llm`),

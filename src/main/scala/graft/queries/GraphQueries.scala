@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge.{inSession, materialize, withConfs}
 import graft.tables.Tables.t
@@ -36,7 +36,6 @@ object GraphQueries {
     * it. */
   private[graft] def warmFamily(s: SparkSession, dir: String): Unit = {
     symAdj(s, dir)
-    symNodeCount(s, dir)
     symDeg(s, dir)
     saltedSymAdj(s, dir)
     saltedSymAdjBfs(s, dir)
@@ -73,12 +72,6 @@ object GraphQueries {
     memoized(s, dir, "symNodes") {
       materialize(symAdj(s, dir).select(col("u").as("node")).distinct())
     }
-
-  /** |symNodes|, counted once per session: `graph_k_core`'s peel bound. */
-  private def symNodeCount(s: SparkSession, dir: String): Long =
-    memoized(s, dir, "symNodeCount") {
-      java.lang.Long.valueOf(symNodes(s, dir).count())
-    }.longValue
 
   /** Shared hub-salted adjacency for the Pregel-shaped loops (BFS,
     * LPA). Built over a PROJECTION of the shared symmetric adjacency so
@@ -1062,100 +1055,114 @@ object GraphQueries {
     * Output: the surviving nodes' in-core degrees, top-50 under the
     * (degree, node) total order.
     *
-    * Scale: each peel is one map-side-combined degree aggregation plus
-    * two BROADCAST LEFT SEMI joins keyed on the endpoint — no candidate
-    * generation, output only shrinks. What persists per round is the
-    * ALIVE set (≤|V| rows — node ids only, eagerly materialized so the
-    * two semi joins and the next round's census all read one tiny
-    * cache), NOT the surviving adjacency: the round-8 form cached the
-    * full edge set three times per invocation, which both repaid the
-    * whole peel under cache eviction at bench scale (~6 s flat at every
-    * SF) and would cache 3× the edge bytes at 100 TB. With alive-set
-    * persists the adjacency stays a linear lineage over the
-    * family-shared `symAdj` cache — nested alive sets mean round k
-    * re-scans it through just ONE pair of broadcast semi filters (see
-    * `kPeel`), all inside one codegen stage, so the whole 3-round peel
-    * is 3 tiny-set jobs + one final census and the big frame is never
-    * shuffled or cached again; superseded alive frames unpersist the
-    * moment the next round materializes. At a real 100 TB |V| the
-    * alive set broadcasts only while its MEASURED row count is under
-    * `kPeel`'s broadcast cap — the count is already materialized each
-    * round, so the decision is free — and above the cap the semi joins
-    * plan as ordinary shuffled joins (an explicit `broadcast()` hint
-    * would be HONORED, not demoted, and a billion-row alive set would
-    * kill the driver at the 8 GB broadcast limit; the conditional is
-    * the fallback AQE cannot provide). The peel also EXITS at its fixpoint
-    * (standard k-core termination: a round that drops no node proves all
-    * later rounds identity), so a graph whose 3-core stabilizes in round
-    * one pays one census, not three. */
+    * Scale: `kPeel` dispatches on `Components.boundedRows`, the bounded
+    * read `minLabel` also uses. An adjacency of fewer than
+    * `2 · RowsPerPartition` rows — one loop partition; `symAdj` has
+    * 8,688 rows at sf0.01 and 47,450 at sf0.1 — is collected once and
+    * peeled on the driver, where the loop spent three rounds of serial
+    * one-task jobs on it. Larger adjacencies run the distributed peel
+    * (`kPeelLoop`): each round is one map-side-combined degree census,
+    * persisted (≤|V| rows), and one action that reads |nodes| and
+    * |alive| from it; the next adjacency is the BASE adjacency behind
+    * two semi joins on the latest alive set, so the big frame is never
+    * shuffled or cached again and the whole peel is one tiny-set job per
+    * round. Both paths stop at the exact fixpoint: a
+    * round that drops no node proves every later round identity, so a
+    * graph whose 3-core stabilizes in round one pays one census, not
+    * three. */
   def graphKCore(s: SparkSession, dir: String): DataFrame =
-    kPeel(symAdj(s, dir), symNodeCount(s, dir), k = 3, rounds = 3)
+    kPeel(symAdj(s, dir), k = 3, rounds = 3)
       .groupBy(col("u").as("node")).agg(count(lit(1)).as("core_deg"))
       .orderBy(desc("core_deg"), col("node"))
       .limit(50)
 
-  /** The shared k-peel loop (rounds bounded, fixpoint early-exit):
-    * returns the surviving adjacency after `rounds` peels at threshold
-    * `k` over the base adjacency `adj0` (|nodes(adj0)| ≤ `nNodes`).
+  /** The shared k-peel (rounds bounded, fixpoint early-exit): the
+    * surviving `(u, v)` rows of the base adjacency `adj0` after `rounds`
+    * peels at threshold `k`. Each round counts every node's degree (its
+    * rows as `u`) over the current rows, keeps the nodes of degree
+    * ≥ `k`, and keeps the BASE rows whose two endpoints are both kept;
+    * it stops after `rounds` rounds or at the first round that drops no
+    * node. Rows that `Components.boundedRows` returns (fewer than one
+    * loop partition) peel on the driver ([[driverPeel]]) and come back
+    * as a local frame; otherwise [[kPeelLoop]] runs. Both return
+    * `adj0`'s own `(u, v)` schema. */
+  private[graft] def kPeel(adj0: DataFrame, k: Int, rounds: Int): DataFrame = {
+    val uv = adj0.select("u", "v")
+    graft.operators.Components.boundedRows(uv) match {
+      case Some(rows) => adj0.sparkSession.createDataFrame(
+        java.util.Arrays.asList(driverPeel(rows, k, rounds): _*), uv.schema)
+      case None => kPeelLoop(uv, k, rounds)
+    }
+  }
+
+  /** `kPeel`'s rounds over collected `(u, v)` rows, on the driver. */
+  private[graft] def driverPeel(base: Array[Row], k: Int, rounds: Int): Array[Row] = {
+    var rows = base
+    var r = 0
+    var fixed = false
+    while (r < rounds && !fixed) {
+      val deg = rows.groupMapReduce(_.get(0))(_ => 1L)(_ + _)
+      val alive = deg.collect { case (u, d) if d >= k => u }.toSet
+      if (alive.size == deg.size) fixed = true
+      // a null endpoint never matches the loop's semi joins
+      else rows = base.filter(row => !row.isNullAt(0) && !row.isNullAt(1) &&
+        alive(row.get(0)) && alive(row.get(1)))
+      r += 1
+    }
+    rows
+  }
+
+  /** `kPeel`'s distributed peel, for adjacencies of at least one loop
+    * partition; `private[graft]` so specs can run it at any size.
     *
+    * Each round persists the degree census `(u, deg)` (≤|V| rows) and
+    * reads |nodes(adj)| and |alive| (`deg ≥ k`) with ONE action, which
+    * also materializes the census; `nAlive == nNodes` is the exact
+    * fixpoint test (no node dropped, so every later round is identity).
     * Alive sets are NESTED (alive_{r+1} ⊆ alive_r: degrees only shrink
-    * under peeling, so a node passing round r+1's test passed round
-    * r's), which buys two things the round-9 chained form lacked:
-    * (1) each round's adjacency derives from the BASE adjacency
-    * filtered by only the LATEST alive set — one pair of broadcast semi
-    * filters regardless of round number, bit-identical to chaining all
-    * rounds' filters because filtering by a subset subsumes filtering
-    * by its supersets; and (2) the superseded alive frame can be
-    * UNPERSISTED the moment the next round's count materializes (no
-    * later plan references it), so a peel holds at most ONE tiny cached
-    * frame at a time instead of one per round. The final frame is the
+    * under peeling), which buys two things: (1) each round's adjacency
+    * derives from the BASE adjacency filtered by only the LATEST alive
+    * set — one pair of semi filters regardless of round number,
+    * bit-identical to chaining all rounds' filters; and (2) the
+    * superseded census is UNPERSISTED the moment the next round's
+    * action materializes (no later plan references it), so a peel holds
+    * at most ONE small cached frame at a time. The final census is the
     * only one the returned plan still reads; it stays persisted under
     * the documented lazy-frame convention and is registered with
     * `GraftCaches` so `SparkEntry.releaseCaches()` reclaims it.
     *
-    * Fixpoint exit: `nUpper` is an upper bound on |nodes(adj)| (exact
-    * initially; after a peel the alive count bounds it — a node can
-    * survive the degree test yet lose all its edges). alive ⊆
-    * nodes(adj), so |alive| == upper bound forces alive == nodes(adj):
-    * nothing peeled, every later round is identity. A conservative
-    * bound can only miss an exit (extra round), never take one wrongly
-    * — output is bit-identical to the unrolled rounds, so the oracle's
-    * chained CTEs stand.
-    *
-    * Broadcast discipline: `nAlive` is measured anyway (the fixpoint
-    * test needs it), so the semi joins take the `broadcast()` hint only
-    * when the alive set is provably small (`bcastCap` rows — node ids
-    * only, so the cap bounds the build at ~tens of MB, far inside the
-    * 8 GB driver broadcast limit). Above the cap the hint is OMITTED and
-    * the joins plan as shuffled semi joins on `u`/`v` — the join keys
-    * the adjacency already shuffles on elsewhere in the family. An
-    * unconditional hint would be a scale killer: Spark honors explicit
-    * broadcast hints regardless of size (AQE demotes only ESTIMATED
-    * broadcasts, never hinted ones), so a billion-node alive set would
-    * OOM the driver rather than degrade. `bcastCap` is a parameter so
-    * specs can pin the degraded shape without a billion-row fixture. */
-  private[graft] def kPeel(adj0: DataFrame, nNodes: Long, k: Int, rounds: Int,
+    * Broadcast discipline: `nAlive` is measured anyway, so the semi
+    * joins take the `broadcast()` hint only when the alive set is
+    * provably small (`bcastCap` rows — node ids only, so the cap bounds
+    * the build at ~tens of MB, far inside the 8 GB driver broadcast
+    * limit). Above the cap the hint is OMITTED and the joins plan as
+    * shuffled semi joins on `u`/`v`. An unconditional hint would be a
+    * scale killer: Spark honors explicit broadcast hints regardless of
+    * size (AQE demotes only ESTIMATED broadcasts, never hinted ones), so
+    * a billion-node alive set would OOM the driver rather than degrade.
+    * `bcastCap` is a parameter so specs can pin the degraded shape
+    * without a billion-row fixture. */
+  private[graft] def kPeelLoop(adj0: DataFrame, k: Int, rounds: Int,
       bcastCap: Long = 4000000L): DataFrame = {
     var adj = adj0
-    var nUpper = nNodes
     var prev: DataFrame = null
     var r = 0
     var fixed = false
     while (r < rounds && !fixed) {
-      val alive = adj.groupBy("u").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select("u").persist()
-      val nAlive = alive.count() // ≤|V| rows; eager, both semi joins read the cache
-      if (nAlive == nUpper) {
-        alive.unpersist(blocking = false) // identity round: adj unchanged, frame unused
-        fixed = true                      // (prev stays cached — adj still reads it)
+      val census = adj.groupBy("u").agg(count(lit(1)).as("deg")).persist()
+      val c = census.agg(count(lit(1)), count_if(col("deg") >= k)).head()
+      val (nNodes, nAlive) = (c.getLong(0), c.getLong(1))
+      if (nAlive == nNodes) {
+        census.unpersist(blocking = false) // identity round: adj unchanged, frame unused
+        fixed = true                       // (prev stays cached — adj still reads it)
       } else {
         if (prev != null) prev.unpersist(blocking = false) // superseded (nested sets)
+        val alive = census.filter(col("deg") >= k).select("u")
         val hint = (df: DataFrame) => if (nAlive <= bcastCap) broadcast(df) else df
         adj = adj0.join(hint(alive), Seq("u"), "left_semi")
           .join(hint(alive.withColumnRenamed("u", "v")), Seq("v"), "left_semi")
           .select("u", "v")
-        nUpper = nAlive
-        prev = alive
+        prev = census
       }
       r += 1
     }

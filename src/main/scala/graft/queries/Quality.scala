@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge.materialize
 import graft.tables.Tables.t
 
 /** Data-quality / warehouse-utility operators (SURVEY §2.B dq_* and
@@ -1022,13 +1023,13 @@ object Quality {
     * hit at any graded SF). */
   def dqChiSquare(s: SparkSession, dir: String): DataFrame = {
     // the ≤6-row contingency table feeds FOUR consumers (margins, total,
-    // the scored join) — persisted so the corpus aggregate runs once,
-    // not once per reference (the docs/PLANS.md derived-table rule)
-    val cells = graft.operators.GraftCaches.register(
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n_obs"))
-        .persist())
+    // the scored join) — materialized so the corpus aggregate runs once,
+    // not once per reference (the docs/PLANS.md derived-table rule); a
+    // lazy persist read four times by one plan was built by concurrent
+    // tasks ("not re-adding" block warnings)
+    val cells = materialize(t(s, dir, "lineitem")
+      .groupBy("l_returnflag", "l_linestatus")
+      .agg(count(lit(1)).as("n_obs")))
     val rowT = cells.groupBy("l_returnflag").agg(sum("n_obs").as("n_row"))
     val colT = cells.groupBy("l_linestatus").agg(sum("n_obs").as("n_col"))
     val tot = cells.agg(sum("n_obs").as("n_total"),

@@ -281,18 +281,17 @@ class PlanShapeSpec extends GraftSpec {
     // joins in its plan
     val e = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
     val adj = (e ++ e.map(_.swap)).toDF("u", "v")
-    val nNodes = 4L
     // kill auto-broadcast so any BroadcastHashJoin in the plan can ONLY
-    // come from kPeel's explicit hint — explicit hints are honored
+    // come from kPeelLoop's explicit hint — explicit hints are honored
     // regardless of threshold, estimated broadcasts are not
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val hinted = plan(graft.queries.GraphQueries.kPeel(adj, nNodes, k = 2, rounds = 2))
+      val hinted = plan(graft.queries.GraphQueries.kPeelLoop(adj, k = 2, rounds = 2))
       assert(hinted.contains("BroadcastHashJoin"),
         s"under the cap the measured 3-row alive set must broadcast:\n${hinted.take(3000)}")
       val degraded = plan(
-        graft.queries.GraphQueries.kPeel(adj, nNodes, k = 2, rounds = 2, bcastCap = 0L))
+        graft.queries.GraphQueries.kPeelLoop(adj, k = 2, rounds = 2, bcastCap = 0L))
       assert(!degraded.contains("BroadcastHashJoin") &&
         !degraded.contains("BroadcastExchange"),
         s"above the cap the hint must be OMITTED (a hinted billion-row alive set " +
