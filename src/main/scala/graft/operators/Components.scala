@@ -14,9 +14,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * would run at width 1, so no parallelism is given up — is collected
   * by one bounded read and labelled on the driver by union-find
   * (`unionFind`). On such a graph the loop is pure scheduling: every
-  * batch is several serial one-task stage jobs. The same bounded read
-  * (`boundedRows`) serves both `minLabel` and `GraphQueries.kPeel`, so
-  * the "fits on the driver" decision lives here. The driver answer is the
+  * batch is several serial one-task stage jobs. The "fits on the driver"
+  * decision lives here, in one bounded read (`boundedRows`) that both
+  * `minLabel` and `GraphQueries.kPeel` dispatch on; its rows may come
+  * from a session memo (`GraphQueries`' `symAdjRows` reads the shared
+  * adjacency once per session for both). The driver answer is the
   * EXACT fixpoint at any diameter, where the loop stops at its
   * `MaxRounds` cap. Larger graphs run the distributed loop
   * (`labelLoop`) described below.
@@ -78,8 +80,9 @@ object Components {
   /** The rows of `df` when it has fewer than `2 · RowsPerPartition` of
     * them, else `None` — one bounded collect that reads at most that
     * many rows. Fewer rows is exactly a frame `loopWidth` sizes to ONE
-    * partition: a loop over it is pure scheduling, so its callers
-    * (`minLabel`, `GraphQueries.kPeel`) answer on the driver instead. */
+    * partition: a loop over it is pure scheduling, so the rows'
+    * consumers (`minLabel`, `GraphQueries.kPeel`) answer on the driver
+    * instead. */
   private[graft] def boundedRows(df: DataFrame): Option[Array[Row]] = {
     val cut = 2 * RowsPerPartition // the smallest row count loopWidth splits
     val rows = df.limit(cut.toInt).collect()
@@ -92,7 +95,12 @@ object Components {
     * that [[boundedRows]] returns are labelled on the driver by
     * [[unionFind]]; otherwise the distributed [[labelLoop]] runs. */
   def minLabel(edges: DataFrame): DataFrame =
-    boundedRows(edges.select("src", "dst")) match {
+    minLabel(edges, boundedRows(edges.select("src", "dst")))
+
+  /** [[minLabel]] on `bounded`, the caller's [[boundedRows]] of
+    * `edges.select("src", "dst")`; the rows are only read. */
+  private[graft] def minLabel(edges: DataFrame, bounded: Option[Array[Row]]): DataFrame =
+    bounded match {
       case Some(rows) => unionFind(edges.sparkSession, rows)
       case None => labelLoop(edges)
     }

@@ -29,7 +29,7 @@ import org.apache.spark.sql.SparkSession
   *   - `table_schema` (`tables.Tables.t`, one parquet schema per table
   *     file version);
   *   - graph family (`queries.GraphQueries`): `simEdges`, `symAdj`,
-  *     `symNodes`, `symDeg`, `saltedSymAdj`, `saltedSymAdjBfs`,
+  *     `symAdjRows`, `symNodes`, `symDeg`, `saltedSymAdj`, `saltedSymAdjBfs`,
   *     `lpaLabels`, `prAdjLoop`,
   *     `louvainTrace`, `hIndex12`, `uniformWalk`, `node2vecWalk`,
   *     `landmarkReach`;

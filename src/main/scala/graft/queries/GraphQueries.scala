@@ -36,6 +36,7 @@ object GraphQueries {
     * it. */
   private[graft] def warmFamily(s: SparkSession, dir: String): Unit = {
     symAdj(s, dir)
+    symAdjRows(s, dir)
     symDeg(s, dir)
     saltedSymAdj(s, dir)
     saltedSymAdjBfs(s, dir)
@@ -65,6 +66,14 @@ object GraphQueries {
     memoized(s, dir, "symAdj") {
       val e = simEdges(s, dir)
       materialize(e.union(e.select(col("v").as("u"), col("u").as("v"))))
+    }
+
+  /** `Components.boundedRows` of `symAdj`'s `(u, v)`, read once per
+    * session: `graphComponents` and `graphKCore` dispatch on it. The
+    * array is shared across calls and threads, so it is only read. */
+  private def symAdjRows(s: SparkSession, dir: String): Option[Array[Row]] =
+    memoized(s, dir, "symAdjRows") {
+      graft.operators.Components.boundedRows(symAdj(s, dir).select("u", "v"))
     }
 
   /** Shared node set of the similarity graph, materialized. */
@@ -418,7 +427,9 @@ object GraphQueries {
   /** Connected components of the similarity graph through
     * `operators.Components.minLabel` (driver union-find below one loop
     * partition of edges, else the hub-salted min-label fixpoint) over
-    * the graph family's own edge set, not just the dedup graph. Per
+    * the graph family's own edge set, not just the dedup graph. The
+    * bounded read behind that choice is the `symAdjRows` memo, done
+    * once per session, not per call. Per
     * component: size and max member. The oracle mirrors the fixpoint
     * with a recursive CTE — label propagation to a fixpoint is exactly
     * transitive reachability to the minimum member. Runs to
@@ -426,7 +437,7 @@ object GraphQueries {
   def graphComponents(s: SparkSession, dir: String): DataFrame = {
     val edges = symAdj(s, dir)
       .select(col("u").as("src"), col("v").as("dst"))
-    graft.operators.Components.minLabel(edges)
+    graft.operators.Components.minLabel(edges, symAdjRows(s, dir))
       .groupBy("label")
       .agg(count(lit(1)).as("n_nodes"), max("node").as("max_node"))
       .select(col("label").as("component"), col("n_nodes"), col("max_node"))
@@ -1055,10 +1066,11 @@ object GraphQueries {
     * Output: the surviving nodes' in-core degrees, top-50 under the
     * (degree, node) total order.
     *
-    * Scale: `kPeel` dispatches on `Components.boundedRows`, the bounded
-    * read `minLabel` also uses. An adjacency of fewer than
-    * `2 · RowsPerPartition` rows — one loop partition; `symAdj` has
-    * 8,688 rows at sf0.01 and 47,450 at sf0.1 — is collected once and
+    * Scale: `kPeel` dispatches on the `symAdjRows` memo, the
+    * `Components.boundedRows` read of `symAdj` that `graphComponents`
+    * also uses, done once per session, not per call. An adjacency of
+    * fewer than `2 · RowsPerPartition` rows — one loop partition;
+    * `symAdj` has 8,688 rows at sf0.01 and 47,450 at sf0.1 — is
     * peeled on the driver, where the loop spent three rounds of serial
     * one-task jobs on it. Larger adjacencies run the distributed peel
     * (`kPeelLoop`): each round is one map-side-combined degree census,
@@ -1071,7 +1083,7 @@ object GraphQueries {
     * graph whose 3-core stabilizes in round one pays one census, not
     * three. */
   def graphKCore(s: SparkSession, dir: String): DataFrame =
-    kPeel(symAdj(s, dir), k = 3, rounds = 3)
+    kPeel(symAdj(s, dir), k = 3, rounds = 3, symAdjRows(s, dir))
       .groupBy(col("u").as("node")).agg(count(lit(1)).as("core_deg"))
       .orderBy(desc("core_deg"), col("node"))
       .limit(50)
@@ -1082,13 +1094,15 @@ object GraphQueries {
     * rows as `u`) over the current rows, keeps the nodes of degree
     * ≥ `k`, and keeps the BASE rows whose two endpoints are both kept;
     * it stops after `rounds` rounds or at the first round that drops no
-    * node. Rows that `Components.boundedRows` returns (fewer than one
-    * loop partition) peel on the driver ([[driverPeel]]) and come back
-    * as a local frame; otherwise [[kPeelLoop]] runs. Both return
-    * `adj0`'s own `(u, v)` schema. */
-  private[graft] def kPeel(adj0: DataFrame, k: Int, rounds: Int): DataFrame = {
+    * node. `bounded` is `Components.boundedRows(adj0.select("u", "v"))`,
+    * read by the caller: its rows (fewer than one loop partition) peel
+    * on the driver ([[driverPeel]]) and come back as a local frame; on
+    * `None` [[kPeelLoop]] runs. Both return `adj0`'s own `(u, v)`
+    * schema. */
+  private[graft] def kPeel(adj0: DataFrame, k: Int, rounds: Int,
+      bounded: Option[Array[Row]]): DataFrame = {
     val uv = adj0.select("u", "v")
-    graft.operators.Components.boundedRows(uv) match {
+    bounded match {
       case Some(rows) => adj0.sparkSession.createDataFrame(
         java.util.Arrays.asList(driverPeel(rows, k, rounds): _*), uv.schema)
       case None => kPeelLoop(uv, k, rounds)

@@ -1698,7 +1698,7 @@ object LlmExtra {
     edges.count()
     hnswReadoutShared(s, dir).count()
     ivfTop10Shared(s, dir).count()
-    pqTop5Shared(s, dir).count()
+    pqTop5Shared(s, dir)
     trainedMerges(s, dir)
     richTrained(s, dir)
   }
@@ -2649,20 +2649,21 @@ object LlmExtra {
     * discipline). */
   private def pqTop5Shared(s: SparkSession, dir: String): DataFrame =
     graft.operators.SessionMemo.memoized(s, s"pqTop5|$dir", "pqTop5") {
-      GraftCaches.register(pqTop5Build(s, dir).persist())
+      materialize(pqTop5Build(s, dir))
     }
 
   private def pqTop5Build(s: SparkSession, dir: String): DataFrame = {
-    // qv feeds every training round, the encode pass and the probe
-    // tables — one posexplode, persisted (the kmeans discipline)
-    val qv = t(s, dir, "embeddings")
+    // qv (one posexplode) feeds every training round, the encode pass
+    // and the probe tables, and each round's cent is broadcast to more
+    // than one join — both are materialized, since a lazy persist read
+    // from several sides of one plan let concurrent tasks compute the
+    // same blocks (the kmeans discipline)
+    val qv = materialize(t(s, dir, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
       .select(col("vec_id"),
         call_function("div", col("pos").cast("long"), lit(16L)).as("sub"),
         col("pos"),
-        floor(col("x").cast("double") * 10000).cast("long").as("xq"))
-      .persist()
-    GraftCaches.register(qv)
+        floor(col("x").cast("double") * 10000).cast("long").as("xq")))
     val dd = (col("xq") - col("cq")) * (col("xq") - col("cq"))
     def assignTo(cent: DataFrame): DataFrame = {
       val d2 = qv.join(broadcast(cent), Seq("sub", "pos"))
@@ -2674,10 +2675,9 @@ object LlmExtra {
     var cent = qv.filter(col("vec_id") < 8)
       .select(col("sub"), col("vec_id").as("cid"), col("pos"), col("xq").as("cq"))
     for (_ <- 1 to 2) {
-      cent = GraftCaches.register(qv.join(assignTo(cent), Seq("vec_id", "sub"))
+      cent = materialize(qv.join(assignTo(cent), Seq("vec_id", "sub"))
         .groupBy("sub", "cid", "pos")
-        .agg(floor(sum(col("xq")) / count(lit(1))).cast("long").as("cq"))
-        .cache())
+        .agg(floor(sum(col("xq")) / count(lit(1))).cast("long").as("cq")))
     }
     val codes = assignTo(cent)
     val dt = qv.filter(col("vec_id") < 10)

@@ -146,6 +146,16 @@ class ComponentsSpec extends GraftSpec {
     assert(labelSet(loop) == expect ++ Set((200000L, 200000L), (200001L, 200000L)))
   }
 
+  test("minLabel with no bounded rows takes the loop, equal to the driver path") {
+    val edges = undirected(chainsFixture)
+    val loop = Components.minLabel(edges, None)
+    val driver = Components.minLabel(edges)
+    assert(!onDriver(loop))
+    assert(onDriver(driver))
+    assert(labelSet(loop) == labelSet(driver))
+    graft.SparkEntry.releaseCaches()
+  }
+
   test("releaseCaches frees every loop cache; only checkpoints stay") {
     graft.SparkEntry.releaseCaches()
     def persisted = spark.sparkContext.getPersistentRDDs
