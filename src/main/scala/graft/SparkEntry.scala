@@ -12,9 +12,9 @@ import graft.oracle.OracleSql
   *
   * Cache lifecycle convention: a `queries` entry returns a LAZY frame the
   * caller materializes, so a query whose plan persists an intermediate
-  * referenced more than once (dq_sequence_gaps' key table, k-core's
-  * final alive set, modularity's labeled edges, the DBSCAN grid, the
-  * family-shared memo frames) cannot unpersist it before returning —
+  * referenced more than once (dq_sequence_gaps' key table, the DBSCAN
+  * grid, the family-shared memo frames) cannot unpersist it before
+  * returning —
   * the blocks stay cached and are reclaimed by the block manager's LRU
   * under memory pressure (storage is MEMORY_AND_DISK; eviction is safe,
   * lineage rebuilds). A long-lived session embedding this library calls
@@ -24,9 +24,9 @@ import graft.oracle.OracleSql
   * blunter whole-session alternative. That state lives in two places:
   * the session memo (`operators.SessionMemo`, every family-shared
   * derivation and table schema) and the frame registry
-  * (`operators.GraftCaches`). Every persisted frame — a memo value's
-  * included — registers with `GraftCaches` where it is built, so
-  * release is those two calls and nothing else.
+  * (`operators.GraftCaches`). `GraftCaches.persist` is the one call
+  * that persists a frame — a memo value's included — and it registers
+  * the frame, so release is those two calls and nothing else.
   */
 object SparkEntry {
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import GraftCaches.persist
 
 /** Connected components by min-label propagation — the Pregel shape on
   * plain DataFrames (used by graph_components, llm_dedup_components,
@@ -161,8 +162,8 @@ object Components {
     // Cached like every later batch: unpersisting it uncached after the
     // first batch dropped that batch's cache, and the second batch ran
     // the first one's folds again (3× its task time, measured)
-    var labels = sadj.degs.select(col("node")).repartition(width, col("node"))
-      .withColumn("label", col("node")).cache()
+    var labels = persist(sadj.degs.select(col("node"))
+      .repartition(width, col("node")).withColumn("label", col("node")))
     // one min-label propagation step, as a pure plan transform. Output
     // schema (node, label, old): `old` is the node's own PREVIOUS label,
     // recovered from the flagged self-loop row inside the same aggregate
@@ -209,7 +210,7 @@ object Components {
           val ck = folded.observe(obs, chgMetric.as("chg")).localCheckpoint(true)
           (ck, obs.get.apply("chg").asInstanceOf[Number].longValue)
         } else {
-          val c = folded.cache()
+          val c = persist(folded)
           (c, c.agg(chgMetric).head.getLong(0))
         }
       labels.unpersist()
@@ -217,10 +218,6 @@ object Components {
       converged = changed == 0L
     }
     sadj.unpersist()
-    // a final CACHE batch is still persisted under the returned frame:
-    // register it so `SparkEntry.releaseCaches()` frees it. A final
-    // checkpoint is not registered (see `Bridge.materialize`).
-    if (labels.storageLevel.useMemory) GraftCaches.register(labels)
     labels.select(col("node"), col("label"))
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import GraftCaches.persist
 
 /** Hot-key guards for candidate-generation joins (docs/PLANS.md "LSH
   * banding" and "inverted index" hazards — the two documented 100 TB
@@ -59,16 +60,15 @@ object HotKeys {
     * join share one aggregation pass — the count job itself is the only
     * added work over the unguarded form, and the cache entry is
     * near-empty by construction (only pathological keys survive). The
-    * cache is registered with `GraftCaches` (the returned plan still
-    * reads it, so it cannot unpersist here); `SparkEntry.releaseCaches()`
-    * reclaims it. */
+    * returned plan still reads the cache, so it cannot unpersist here;
+    * it persists through `GraftCaches.persist`, and
+    * `SparkEntry.releaseCaches()` reclaims it. */
   def dropOverCap(df: DataFrame, keys: Seq[String], cap: Int): DataFrame = {
-    val hot = GraftCaches.register(
+    val hot = persist(
       df.groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as("_hk_n"))
         .filter(col("_hk_n") > cap)
-        .select(keys.map(col): _*)
-        .cache())
+        .select(keys.map(col): _*))
     val nHot = hot.limit((MaxBroadcastHotKeys + 1).toInt).count()
     if (nHot <= MaxBroadcastHotKeys) df.join(broadcast(hot), keys, "left_anti")
     else df.join(hot, keys, "left_anti")

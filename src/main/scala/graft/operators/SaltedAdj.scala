@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import GraftCaches.persist
 
 /** Hub-salted adjacency for iterative graph loops — the one power-law
   * hardening every Pregel-shaped loop in the engine shares: connected
@@ -76,14 +77,6 @@ final class SaltedAdj private (
     edges.unpersist()
     degs.unpersist()
   }
-
-  /** Register both caches with [[GraftCaches]] (so
-    * `SparkEntry.releaseCaches()` drops them); returns this. */
-  def registered(): SaltedAdj = {
-    GraftCaches.register(edges)
-    GraftCaches.register(degs)
-    this
-  }
 }
 
 object SaltedAdj {
@@ -101,20 +94,23 @@ object SaltedAdj {
 
   /** Build the salted, cached adjacency from `adj(u, v)` (undirected
     * graphs pass both directions). Materializes the cache (one census
-    * pass + one count). */
+    * pass + one count). Every cache goes through [[GraftCaches.persist]],
+    * so `SparkEntry.releaseCaches()` frees an adjacency its caller
+    * keeps (a session memo's); a loop that is done with it calls
+    * `unpersist`. */
   def apply(
       adj0: DataFrame,
       hotDegree: Long = DefaultHotDegree,
       salts: Int = DefaultSalts): SaltedAdj = {
-    val adj = adj0.cache()
+    val adj = persist(adj0)
     // ONE census aggregation yields everything the setup needs: total
     // edge rows (Σ degree → loop width) and the max degree (hub
     // presence) come from one action; the hot list itself is a lazy
     // filter over the CACHED census, so no separate count job runs.
     // The census cache is one row per distinct u — small, and it backs
     // the per-round broadcast of the hot set when salting is on.
-    val degs = adj.groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("_d")).cache()
+    val degs = persist(adj.groupBy(col("u").as("node"))
+      .agg(count(lit(1)).as("_d")))
     val stats = degs.agg(
       coalesce(sum("_d"), lit(0L)), coalesce(max("_d"), lit(0L))).head
     val n = stats.getLong(0)
@@ -133,14 +129,15 @@ object SaltedAdj {
     val prePartition = useSalt || n >= Components.RowsPerPartition
     val edges =
       if (useSalt)
-        adj.join(broadcast(hot.select(col("node").as("u"), lit(1).as("_hot"))),
-            Seq("u"), "left")
-          .withColumn("_salt",
-            when(col("_hot").isNotNull, pmod(xxhash64(col("v")), lit(salts.toLong)))
-              .otherwise(lit(0L)))
-          .drop("_hot")
-          .repartition(width, col("u"), col("_salt")).cache()
-      else if (prePartition) adj.repartition(width, col("u")).cache()
+        persist(
+          adj.join(broadcast(hot.select(col("node").as("u"), lit(1).as("_hot"))),
+              Seq("u"), "left")
+            .withColumn("_salt",
+              when(col("_hot").isNotNull, pmod(xxhash64(col("v")), lit(salts.toLong)))
+                .otherwise(lit(0L)))
+            .drop("_hot")
+            .repartition(width, col("u"), col("_salt")))
+      else if (prePartition) persist(adj.repartition(width, col("u")))
       else adj // already cached; stats above materialized it
     if (prePartition) {
       edges.count() // materialize at loop width, then drop the raw cache

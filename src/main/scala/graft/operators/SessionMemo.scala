@@ -19,8 +19,8 @@ import org.apache.spark.sql.SparkSession
   *     are the exception — their keys carry the file's length and
   *     modification time, so a rewritten file misses and re-resolves.
   *
-  * Release contract: a builder registers every persisted frame its
-  * value holds with [[GraftCaches]] at build time. `clear()` then only
+  * Release contract: every frame a value holds was persisted through
+  * [[GraftCaches.persist]], which registers it. `clear()` then only
   * drops the entries, and `SparkEntry.releaseCaches()` is
   * `SessionMemo.clear(); GraftCaches.releaseAll()` — no per-kind
   * release code exists anywhere.

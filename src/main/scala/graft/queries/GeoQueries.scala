@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.tables.Tables.t
+import graft.operators.GraftCaches.persist
 
 /** Planar spatial joins via grid bucketing — the Spark-first shape of
   * the reference's TIGER/PostGIS geometry module (SURVEY §2.A A15,
@@ -186,12 +187,11 @@ object GeoQueries {
     * min-label loop. Both assign each component its minimum cell id. */
   def geoGridDbscan(s: SparkSession, dir: String): DataFrame = {
     val cellId = (cx: Column, cy: Column) => cx * 1000L + cy
-    val dense = points(s, dir)
+    val dense = persist(points(s, dir)
       .groupBy(call_function("div", col("x"), lit(20L)).as("cx"),
         call_function("div", col("y"), lit(20L)).as("cy"))
       .agg(count(lit(1)).as("n_pts"))
-      .filter(col("n_pts") >= 4)
-      .persist()
+      .filter(col("n_pts") >= 4))
     val nbr = array((-1 to 1).map(i => lit(i.toLong)): _*)
     val probe = dense
       .withColumn("dx", explode(nbr)).withColumn("dy", explode(nbr))

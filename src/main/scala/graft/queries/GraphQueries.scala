@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge.{inSession, materialize, withConfs}
 import graft.tables.Tables.t
+import graft.operators.GraftCaches.persist
 
 /** Graph operators over data-derived edge sets (SURVEY §2.B graph_*
   * rows). Components (min-label propagation) lives in
@@ -55,7 +56,7 @@ object GraphQueries {
 
   /** Shared symmetric adjacency (both edge directions), materialized
     * (round 16): consumers reference the adjacency 3–12× per plan, and
-    * through a bare `.cache()` each reference re-inlines the full
+    * through a lazily persisted frame each reference re-inlines the full
     * simEdges lineage into the consumer's logical plan —
     * `graph_jaccard_neighbors` formatted to 744 KB,
     * `graph_louvain_one_level` to 572 KB, `graph_pagerank_converged` to
@@ -89,7 +90,7 @@ object GraphQueries {
     * touches the family-shared frame. */
   private def saltedSymAdj(s: SparkSession, dir: String): graft.operators.SaltedAdj =
     memoized(s, dir, "saltedSymAdj") {
-      graft.operators.SaltedAdj(symAdj(s, dir).select(col("u"), col("v"))).registered()
+      graft.operators.SaltedAdj(symAdj(s, dir).select(col("u"), col("v")))
     }
 
   /** BFS variant of the shared salted adjacency: real edges carry hop
@@ -105,7 +106,6 @@ object GraphQueries {
         .select(col("node").as("u"), col("node").as("v"), lit(0L).as("w"))
       graft.operators.SaltedAdj(
         symAdj(s, dir).select(col("u"), col("v")).withColumn("w", lit(1L)).union(loops))
-        .registered()
     }
 
   /** PageRank (damping 0.85, 3 rounds) over a similarity graph: nodes
@@ -158,8 +158,8 @@ object GraphQueries {
     * first (inert at graded SF: blocks run 1..10). The per-round
     * edges⋈rank join is hub-salted via SaltedAdj (power-law tails put a
     * hub's whole adjacency in one reducer otherwise; census finds no
-    * hubs at graded SF → zero-overhead path). Both caches register with
-    * `GraftCaches` (the returned plans reference them). */
+    * hubs at graded SF → zero-overhead path). The returned plans read
+    * its caches, which `SaltedAdj` persists through `GraftCaches`. */
   private def prGraph(s: SparkSession, dir: String)
       : (graft.operators.SaltedAdj, DataFrame, DataFrame) = {
     val docs = t(s, dir, "documents")
@@ -180,7 +180,7 @@ object GraphQueries {
     // compute the same blocks concurrently
     val deg = materialize(sadj.edges.groupBy("u").agg(count(lit(1)).as("deg"))
       .withColumnRenamed("u", "node"))
-    (sadj.registered(), deg, docs.select("node"))
+    (sadj, deg, docs.select("node"))
   }
 
   /** CONVERGENCE-MODE PageRank (damping 0.5, integer 1e-6 units) over
@@ -233,12 +233,11 @@ object GraphQueries {
     // real edges carry the u-side out-degree (contribution divisor);
     // self-loops are marked deg = 0 and thread the node's own history
     val prAdj = memoized(s, dir, "prAdjLoop") {
-      graft.operators.GraftCaches.register(
+      persist(
         symAdj(s, dir).join(symDeg(s, dir), "u")
           .select(col("u"), col("v"), col("deg"))
           .union(nodes.select(col("node").as("u"), col("node").as("v"),
-            lit(0L).as("deg")))
-          .cache())
+            lit(0L).as("deg"))))
     }
     // frame: (node, r = current rank, rh = array of ranks r_0..r_j)
     def prRound(adj: DataFrame, rank: DataFrame): DataFrame =
@@ -279,19 +278,18 @@ object GraphQueries {
         array(lit(1000000L)).as("rh"))
       val adjC = inSession(c, prAdj)
       for (_ <- 1 to maxRounds / 2) cur = prRound(adjC, cur)
-      val half = cur.persist()
+      val half = persist(cur)
       val l1Half = l1Trace(half)
       val eps0 = 200L * l1Half.head.getLong(2)
       if (l1Half.exists(_.getLong(1) <= eps0)) (half, l1Half)
       else {
         for (_ <- maxRounds / 2 + 1 to maxRounds) cur = prRound(adjC, cur)
-        val full = cur.persist()
+        val full = persist(cur)
         val l1Full = l1Trace(full)
         half.unpersist(blocking = false)
         (full, l1Full)
       }
     }
-    graft.operators.GraftCaches.register(hist)
     val eps = 200L * l1s.head.getLong(2)
     val hit = l1s.find(_.getLong(1) <= eps)
     val k = hit.map(_.getLong(0).toInt).getOrElse(maxRounds)
@@ -496,11 +494,10 @@ object GraphQueries {
     // symmetric adjacency (a, n): a is the endpoint, n the neighbor;
     // capped on the WEDGE CENTER n — a hub center would emit deg²
     // wedge rows into the self-join below
-    val adj = graft.operators.GraftCaches.register(
+    val adj = persist(
       graft.operators.HotKeys.dropOverCap(
         symAdj(s, dir).select(col("u").as("a"), col("v").as("n")),
-        Seq("n"), graft.operators.HotKeys.DefaultCap)
-      .persist())
+        Seq("n"), graft.operators.HotKeys.DefaultCap))
     val deg = adj.groupBy("a").agg(count(lit(1)).as("deg"))
     val common = adj.select(col("a"), col("n"))
       .join(adj.select(col("a").as("b"), col("n")), "n")
@@ -541,11 +538,10 @@ object GraphQueries {
     val withLabels = adj
       .join(lab.select(col("node").as("u"), col("label").as("lu")), "u")
       .join(lab.select(col("node").as("v"), col("label").as("lv")), "v")
-    val cens = graft.operators.GraftCaches.register(
+    val cens = persist(
       withLabels.groupBy(col("lu").as("community"))
         .agg(count(lit(1)).as("deg_sum"),
-          count_if(col("lu") === col("lv")).as("in_edges"))
-        .persist())
+          count_if(col("lu") === col("lv")).as("in_edges")))
     val twoM = cens.agg(sum("deg_sum").as("twom"))
     val nodesC = lab.groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_nodes"))
@@ -1142,8 +1138,8 @@ object GraphQueries {
     * action materializes (no later plan references it), so a peel holds
     * at most ONE small cached frame at a time. The final census is the
     * only one the returned plan still reads; it stays persisted under
-    * the documented lazy-frame convention and is registered with
-    * `GraftCaches` so `SparkEntry.releaseCaches()` reclaims it.
+    * the documented lazy-frame convention, and `SparkEntry.releaseCaches()`
+    * reclaims it (every census persists through `GraftCaches`).
     *
     * Broadcast discipline: `nAlive` is measured anyway, so the semi
     * joins take the `broadcast()` hint only when the alive set is
@@ -1163,7 +1159,7 @@ object GraphQueries {
     var r = 0
     var fixed = false
     while (r < rounds && !fixed) {
-      val census = adj.groupBy("u").agg(count(lit(1)).as("deg")).persist()
+      val census = persist(adj.groupBy("u").agg(count(lit(1)).as("deg")))
       val c = census.agg(count(lit(1)), count_if(col("deg") >= k)).head()
       val (nNodes, nAlive) = (c.getLong(0), c.getLong(1))
       if (nAlive == nNodes) {
@@ -1180,7 +1176,6 @@ object GraphQueries {
       }
       r += 1
     }
-    if (prev != null) graft.operators.GraftCaches.register(prev)
     adj
   }
 
@@ -1360,8 +1355,7 @@ object GraphQueries {
     val h1 = e.join(a1, "v").groupBy("u").agg(sum("a").as("h"))
     // a2 feeds BOTH the h2 half-step and the final attach — persisted
     // (|nodes| rows) so the 3-join chain above it runs once
-    val a2 = graft.operators.GraftCaches.register(
-      e.join(h1, "u").groupBy("v").agg(sum("h").as("a")).persist())
+    val a2 = persist(e.join(h1, "u").groupBy("v").agg(sum("h").as("a")))
     val h2 = e.join(a2, "v").groupBy("u").agg(sum("a").as("h"))
     nodes
       .join(a2.withColumnRenamed("v", "node"), Seq("node"), "left")
@@ -1771,8 +1765,7 @@ object GraphQueries {
     // cached frame is the DERIVED (part, supplier) edge list — ~0.1% of
     // lineitem — exactly the "compute the incidence once" posture a
     // bipartite projection runs at 100 TB.
-    val kept = graft.operators.GraftCaches.register(
-      inc.join(occ.filter(col("occ") <= 32), "p").persist())
+    val kept = persist(inc.join(occ.filter(col("occ") <= 32), "p"))
     kept.select(col("p"), col("sp").as("u"))
       .join(kept.select(col("p"), col("sp").as("v")), "p")
       .filter(col("u") < col("v"))

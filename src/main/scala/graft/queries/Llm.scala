@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.tables.Tables.t
+import graft.operators.GraftCaches.persist
 import graft.llm.{MinHash, Vectors}
 
 /** LLM-data-pipeline operators (SURVEY §2.B llm_* rows): dedup,
@@ -67,8 +68,7 @@ object Llm {
     * an invocation boundary. */
   private[graft] def sigsShared(s: SparkSession, dir: String): DataFrame =
     graft.operators.SessionMemo.memoized(s, s"minhashSigs|$dir", "minhashSigs") {
-      graft.operators.GraftCaches.register(
-        signatures(t(s, dir, "documents")).persist())
+      persist(signatures(t(s, dir, "documents")))
     }
 
   /** LSH band rows (doc_id, band, bkey) from a signature table, with the
@@ -107,7 +107,7 @@ object Llm {
     * cap so `HotKeySpec` can drive it with planted hot buckets at a
     * small threshold. */
   private[graft] def minhashNearDups(docs: DataFrame, bandCap: Int): DataFrame =
-    minhashNearDupsSigs(signatures(docs).persist(), bandCap)
+    minhashNearDupsSigs(persist(signatures(docs)), bandCap)
 
   /** The near-dup pass over a prebuilt signature table — the graded
     * query hands in the family-shared memoized signatures. */
@@ -196,12 +196,11 @@ object Llm {
       .select("src", "dst")
       .distinct()
     // similarity gate on the candidates only; integer threshold 32/64
-    val simPairs = candPairs
+    val simPairs = persist(candPairs
       .join(sigs.select(col("doc_id").as("src"), col("sig").as("sig_a")), "src")
       .join(sigs.select(col("doc_id").as("dst"), col("sig").as("sig_b")), "dst")
       .filter(expr("graft_lmatch(sig_a, sig_b)") >= lit(MinHash.NumPerm / 2))
-      .select("src", "dst")
-      .persist()
+      .select("src", "dst"))
     val edges = simPairs.union(simPairs.select(col("dst").as("src"), col("src").as("dst")))
     val labels = graft.operators.Components.minLabel(edges)
     labels.join(t(s, dir, "documents")
@@ -234,8 +233,7 @@ object Llm {
     * this memo: it stays a fresh corpus scan every time. */
   private[graft] def truthTop10(s: SparkSession, dir: String): DataFrame =
     graft.operators.SessionMemo.memoized(s, s"annTruth10|$dir", "annTruth10") {
-      graft.operators.GraftCaches.register(
-        simCosineTopkK(s, dir, 10).persist())
+      persist(simCosineTopkK(s, dir, 10))
     }
 
   /** The brute-force pass with the heap depth as a parameter — the

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.tables.Tables.t
 import graft.llm.{Lsh, SimHash, Winnowing}
-import graft.operators.GraftCaches
+import graft.operators.GraftCaches.persist
 import org.apache.spark.sql.graftbridge.Bridge.{inSession, materialize, withConfs}
 
 /** Extended LLM-training-data-pipeline operators beyond SURVEY's original
@@ -51,11 +51,9 @@ object LlmExtra {
     // the cached table is ~0.1% of the input — MEMORY_AND_DISK absorbs it.
     // The signature pass is spread first (Tables.spread): a narrow scan
     // otherwise runs every graft_simhash on a few cores.
-    val sigs = graft.tables.Tables.spread(s,
+    val sigs = persist(graft.tables.Tables.spread(s,
         t(s, dir, "documents").select(col("doc_id"), col("text")))
-      .select(col("doc_id"), expr("graft_simhash(text)").as("sig"))
-      .persist()
-    GraftCaches.register(sigs)
+      .select(col("doc_id"), expr("graft_simhash(text)").as("sig")))
     val bandStructs = array((0 until SimHash.Bands).map { b =>
       struct(lit(b).as("band"),
         shiftrightunsigned(col("sig"), b * SimHash.BandBits).bitwiseAND(lit(0xFFFFL)).as("bkey"))
@@ -188,12 +186,10 @@ object LlmExtra {
       Lsh.buckets(v.map(_.toDouble).toArray).map { case (tb, bk) => tb * 65536 + bk })
     // persisted: probes fork off emb, so the bucket UDF otherwise runs
     // twice over every embedding
-    val emb = t(s, dir, "embeddings")
+    val emb = persist(t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", graft.llm.Vectors.fnorm(col("v")))
-      .withColumn("bkt", explode(bucketsUdf(col("v"))))
-      .persist()
-    GraftCaches.register(emb)
+      .withColumn("bkt", explode(bucketsUdf(col("v")))))
     val probes = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("pid"), col("v").as("pv"), col("nrm").as("pnorm"), col("bkt"))
     val cands = emb.join(probes, "bkt")
@@ -229,7 +225,7 @@ object LlmExtra {
     * discipline). */
   private def ivfTop10Shared(s: SparkSession, dir: String): DataFrame =
     graft.operators.SessionMemo.memoized(s, s"ivfTop10|$dir", "ivfTop10") {
-      GraftCaches.register(simIvfTopkK(s, dir, 10).persist())
+      persist(simIvfTopkK(s, dir, 10))
     }
 
   /** IVF candidate search with the final heap depth as a parameter —
@@ -240,11 +236,9 @@ object LlmExtra {
     graft.udx.NGrams.registerAll(s)
     // persisted: emb feeds the centroid slice, the scored cross join,
     // and both per-pair vector join-backs
-    val emb = t(s, dir, "embeddings")
+    val emb = persist(t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").as("v"))
-      .withColumn("nrm", graft.llm.Vectors.fnorm(col("v")))
-      .persist()
-    GraftCaches.register(emb)
+      .withColumn("nrm", graft.llm.Vectors.fnorm(col("v"))))
     val cents = emb.filter(col("vec_id") < Ivf.NCells)
       .select(col("vec_id").cast("long").as("cell"), col("v").as("cv"))
     val scored = emb.crossJoin(broadcast(cents))
@@ -419,7 +413,7 @@ object LlmExtra {
         Seq("band", "bkey"))
       .filter(col("da") < col("db"))
       .select("da", "db").distinct()
-    val pairsP = GraftCaches.register(pairs.persist())
+    val pairsP = persist(pairs)
     val deg = pairsP.select(col("da").as("doc_id"))
       .unionAll(pairsP.select(col("db").as("doc_id")))
       .groupBy("doc_id").agg(count(lit(1)).as("deg"))
@@ -579,8 +573,8 @@ object LlmExtra {
         graft.llm.Hnsw.M * hnswSweepConfigs.size
       withConfs(s, "spark.sql.shuffle.partitions" ->
           graft.operators.Components.loopWidth(bound).toString) { c =>
-        val out = GraftCaches.register(hnswSearchReadoutMulti(c,
-          inSession(c, emb), inSession(c, edges), inSession(c, truth), hnswSweepConfigs).persist())
+        val out = persist(hnswSearchReadoutMulti(c,
+          inSession(c, emb), inSession(c, edges), inSession(c, truth), hnswSweepConfigs))
         out.count()
         inSession(s, out)
       }
@@ -607,11 +601,9 @@ object LlmExtra {
   private def hnswGraphBuild(s: SparkSession, dir: String, m: Int): (DataFrame, DataFrame) = {
     import graft.llm.{Hnsw, Ivf, Lsh}
     graft.udx.NGrams.registerAll(s)
-    val emb = t(s, dir, "embeddings")
+    val emb = persist(t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").as("v"))
-      .withColumn("nrm", graft.llm.Vectors.fnorm(col("v")))
-      .persist()
-    GraftCaches.register(emb)
+      .withColumn("nrm", graft.llm.Vectors.fnorm(col("v"))))
     // RING-BOUNDED candidate pairs (the build's 100 TB contract): a
     // plain bucket self-join is QUADRATIC in bucket population — at a
     // fixed bucket count, 10× the corpus means 100× the pairs (measured:
@@ -659,10 +651,9 @@ object LlmExtra {
       .agg(graft.udx.TopKAggregator.topk(m)(col("ecos"), col("n")).as("tk"))
       .select(col("u"), explode(col("tk.items")).as("it"))
       .select(col("u"), col("it._2").as("n"))
-    val edges = GraftCaches.register(
+    val edges = persist(
       gtop.unionByName(gtop.select(col("n").as("u"), col("u").as("n")))
-        .distinct()
-        .persist())
+        .distinct())
     (emb, edges)
   }
 
@@ -1032,19 +1023,17 @@ object LlmExtra {
     val nib = substring(md5(col("doc_id").cast("string")), 1, 1)
     // spread the gram generation (Tables.spread): graft_ngrams multiplies
     // every doc into |text| grams, so a narrow scan caps the whole pass
-    val grams = graft.tables.Tables.spread(s,
+    // persisted (round-15): the distinct (split, gram) table feeds
+    // BOTH sides of the overlap join AND the per-split sizes —
+    // unpersisted, the gram explode + distinct shuffle ran three times
+    val grams = persist(graft.tables.Tables.spread(s,
         t(s, dir, "documents").select(col("doc_id"), col("text")))
       .withColumn("split",
         when(nib.isin("c", "d"), "val")
           .when(nib.isin("e", "f"), "test")
           .otherwise("train"))
       .select(col("split"), expr("graft_ngrams(text, 8)").as("g"))
-      .distinct()
-      // persisted (round-15): the distinct (split, gram) table feeds
-      // BOTH sides of the overlap join AND the per-split sizes —
-      // unpersisted, the gram explode + distinct shuffle ran three times
-      .persist()
-    GraftCaches.register(grams)
+      .distinct())
     val overlap = grams.select(col("split").as("split_a"), col("g"))
       .join(grams.select(col("split").as("split_b"), col("g")), "g")
       .filter(col("split_a") =!= col("split_b"))
@@ -1733,7 +1722,8 @@ object LlmExtra {
     * every learned merge) — `llm_bpe_vocab_apply` reads the state
     * directly instead of re-applying 32 merges it just computed. The
     * returned frame is a checkpoint, or the persisted initial state if
-    * no round merged; the caller owns its release. */
+    * no round merged, which a caller done with it unpersists (else
+    * `SparkEntry.releaseCaches()` frees it). */
   private[graft] def bpeTrainFullOnWords(s: SparkSession, words: DataFrame, rounds: Int)
       : (Seq[(Long, String, Long)], DataFrame) = {
     // Each round's state is a checkpoint (`materialize`), planned
@@ -1747,7 +1737,7 @@ object LlmExtra {
     // the tiny exchanges, and an experimental shuffle-width floor
     // bought nothing). 32 rounds ≈ 5.2× the 6-round train: exactly
     // linear in rounds, which is the property that matters at depth.
-    val init = bpeInitWords(words).persist()
+    val init = persist(bpeInitWords(words))
     var v: DataFrame = init
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     for (r <- 1 to rounds) {
@@ -1990,13 +1980,13 @@ object LlmExtra {
     * the rounds-bounded MERGE LIST (driver-side, `llm_bpe_deep_encode`
     * applies it) plus the final word state as its checkpointed FRAME
     * (never collected: the tokenized vocab is corpus-sized, so it stays
-    * on the executors; `llm_bpe_vocab_apply` reads it). The frame
-    * registers with `GraftCaches` at build. */
+    * on the executors; `llm_bpe_vocab_apply` reads it). A training
+    * that merged nothing returns the persisted initial state, which
+    * `GraftCaches.persist` registered when it was built. */
   private def richTrained(s: SparkSession, dir: String)
       : (Seq[(Long, String, Long)], DataFrame) =
     graft.operators.SessionMemo.memoized(s, s"bpeRich|$dir", "bpeRich") {
-      val (merges, fin) = bpeTrainFullOnWords(s, richWords(s, dir), rounds = 32)
-      (merges, GraftCaches.register(fin))
+      bpeTrainFullOnWords(s, richWords(s, dir), rounds = 32)
     }
 
   /** Duplicated-n-gram-fraction quality signal (the RefinedWeb/Gopher
@@ -2028,8 +2018,8 @@ object LlmExtra {
     // persisted (round-15): the capped gram stream feeds the popularity
     // census AND the per-doc join — unpersisted, the gram explode, the
     // md5 pass and dropOverCap's census+anti-join all ran twice
-    val cappedGrams = GraftCaches.register(graft.operators.HotKeys.dropOverCap(
-      grams, Seq("gh"), graft.operators.HotKeys.DefaultCap).persist())
+    val cappedGrams = persist(graft.operators.HotKeys.dropOverCap(
+      grams, Seq("gh"), graft.operators.HotKeys.DefaultCap))
     val popularity = cappedGrams.groupBy("gh").agg(countDistinct(col("doc_id")).as("nd"))
     val perDoc = cappedGrams.join(popularity, "gh")
       .groupBy("doc_id", "source")
@@ -2319,9 +2309,8 @@ object LlmExtra {
           // is dropped (blocking: its disk blocks are part of the same
           // scratch budget) as soon as the bucket's positions commit.
           val before = org.apache.spark.graft.ShuffleScratch.activeShuffleIds(s.sparkContext)
-          val slice = grams(withPos = true)
-            .filter(pmod(col("gh"), lit(nBuckets.toLong)) === b.toLong)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val slice = persist(grams(withPos = true)
+            .filter(pmod(col("gh"), lit(nBuckets.toLong)) === b.toLong))
           val path = s"$scratchRoot/b$b"
           dupPositions(slice, censusOf(slice.select("doc_id", "gh")))
             .write.mode("overwrite").parquet(path)
@@ -2386,7 +2375,7 @@ object LlmExtra {
     * unbounded corpus moves the marginal joins to shuffles and the
     * lift arithmetic to DECIMAL(38), shape unchanged). */
   def llmPmiCollocations(s: SparkSession, dir: String): DataFrame = {
-    val pairs = t(s, dir, "documents")
+    val pairs = persist(t(s, dir, "documents")
       .filter(col("doc_id") < 2000)
       .withColumn("w", split(col("text"), " "))
       .select(explode(zip_with(
@@ -2394,9 +2383,7 @@ object LlmExtra {
         slice(col("w"), lit(2), size(col("w")) - 1),
         (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
       .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .agg(count(lit(1)).as("n_pair"))
-      .persist()
-    GraftCaches.register(pairs)
+      .agg(count(lit(1)).as("n_pair")))
     val left = pairs.groupBy("w1").agg(sum("n_pair").as("n_left"))
     val right = pairs.groupBy("w2").agg(sum("n_pair").as("n_right"))
     val tot = pairs.agg(sum("n_pair").as("n_total"))
@@ -2592,16 +2579,14 @@ object LlmExtra {
     * reference grams — output-linear (a gram matches only its own
     * pair), never corpus×corpus. */
   def llmRougeRecall(s: SparkSession, dir: String): DataFrame = {
-    val grams = t(s, dir, "documents")
+    val grams = persist(t(s, dir, "documents")
       .filter(col("doc_id") < 500)
       .withColumn("w", split(col("text"), " "))
       .select(col("doc_id"), col("lang"), explode(zip_with(
         slice(col("w"), lit(1), size(col("w")) - 1),
         slice(col("w"), lit(2), size(col("w")) - 1),
         (a, b) => concat(a, lit(" "), b))).as("g"))
-      .distinct()
-      .persist()
-    GraftCaches.register(grams)
+      .distinct())
     val cand = grams.filter(col("doc_id") < 250)
     val ref = grams.filter(col("doc_id") >= 250)
       .select((col("doc_id") - 250).as("doc_id"), col("g"))
@@ -2709,16 +2694,14 @@ object LlmExtra {
     * count-shuffles and the scoring pass is two word-keyed equi-joins —
     * nothing quadratic, nothing driver-side. */
   def llmBigramLm(s: SparkSession, dir: String): DataFrame = {
-    val bi = t(s, dir, "documents").filter(col("doc_id") % 10 <= 1)
+    val bi = persist(t(s, dir, "documents").filter(col("doc_id") % 10 <= 1)
       .select(col("doc_id"), col("lang"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), col("lang"),
         explode(zip_with(
           slice(col("w"), lit(1), size(col("w")) - 1),
           slice(col("w"), lit(2), size(col("w")) - 1),
           (a, b) => struct(a.as("w1"), b.as("w2")))).as("g"))
-      .select(col("doc_id"), col("lang"), col("g.w1").as("w1"), col("g.w2").as("w2"))
-      .persist()
-    GraftCaches.register(bi)
+      .select(col("doc_id"), col("lang"), col("g.w1").as("w1"), col("g.w2").as("w2")))
     val train = bi.filter(col("doc_id") % 10 === 1)
     val c2 = train.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
     val c1 = train.groupBy("w1").agg(count(lit(1)).as("c1"))
@@ -2774,13 +2757,12 @@ object LlmExtra {
     }.reduce(_ unionByName _)
     val bands = graft.operators.HotKeys.dropOverCap(
       bandRows, Seq("r", "band", "bkey"), graft.operators.HotKeys.DefaultCap)
-    val cand = bands.select(col("r"), col("doc_id").as("da"), col("band"), col("bkey"))
-      .join(bands.select(col("r"), col("doc_id").as("db"), col("band"), col("bkey")),
-        Seq("r", "band", "bkey"))
-      .filter(col("da") < col("db"))
-      .select("r", "da", "db").distinct()
-      .persist()
-    GraftCaches.register(cand)
+    val cand = persist(
+      bands.select(col("r"), col("doc_id").as("da"), col("band"), col("bkey"))
+        .join(bands.select(col("r"), col("doc_id").as("db"), col("band"), col("bkey")),
+          Seq("r", "band", "bkey"))
+        .filter(col("da") < col("db"))
+        .select("r", "da", "db").distinct())
     val truth = cand.filter(col("r") === 1).select("da", "db")
       .join(sigs.select(col("doc_id").as("da"), col("sig").as("sa")), "da")
       .join(sigs.select(col("doc_id").as("db"), col("sig").as("sb")), "db")
@@ -2894,13 +2876,11 @@ object LlmExtra {
         s"shiftleft(CAST(1 AS BIGINT), i - $lo), CAST(0 AS BIGINT)))")
     // persisted: the sketch pass forks into probes and candidates, and
     // the exact vectors join back twice in stage 2
-    val emb = t(s, dir, "embeddings")
+    val emb = persist(t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", graft.llm.Vectors.fnorm(col("v")))
       .withColumn("sk0", skBits(1))
-      .withColumn("sk1", skBits(33))
-      .persist()
-    GraftCaches.register(emb)
+      .withColumn("sk1", skBits(33)))
     val probes = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("pid"), col("sk0").as("p0"), col("sk1").as("p1"))
     val ham = emb.select(col("vec_id").as("nid"), col("sk0"), col("sk1"))
@@ -3029,7 +3009,7 @@ object LlmExtra {
     // the per-doc readout all fold from it with identical arithmetic
     // (n_tokens = Σc, weight = Σ c·lr — sums of per-token terms grouped
     // by bucket first).
-    val docB = GraftCaches.register(
+    val docB = persist(
       t(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
           explode(split(col("text"), " ")).as("word"))
@@ -3037,8 +3017,7 @@ object LlmExtra {
           (conv(substring(md5(col("word")), 1, 15), 16, 10).cast("long")
             % nBuckets).as("b"))
         .groupBy("doc_id", "lang", "b")
-        .agg(count(lit(1)).as("c"))
-        .persist())
+        .agg(count(lit(1)).as("c")))
     val counts = docB.groupBy("b")
       .agg(sum("c").as("c_corpus"),
         sum(when(col("lang") === "en", col("c")).otherwise(lit(0L))).as("c_target"))

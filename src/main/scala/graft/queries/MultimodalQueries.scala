@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables.t
+import graft.operators.GraftCaches.persist
 import graft.multimodal.{Media, MediaRow}
 
 /** Multimodal-column operators: binary payloads with typed metadata.
@@ -234,9 +235,8 @@ object MultimodalQueries {
     // shift+OR packing (disjoint bit ranges — never a carry, and no
     // ANSI overflow risk the multiply-and-add form would hit on b7)
     val sig = (0 until 8).map(i => shiftleft(blockByte(i), 8 * i)).reduce(_ bitwiseOR _)
-    val sigs = graft.tables.Tables.spread(s, docs)
-      .select(col("doc_id"), sig.as("sig"))
-      .persist()
+    val sigs = persist(graft.tables.Tables.spread(s, docs)
+      .select(col("doc_id"), sig.as("sig")))
     val bandStructs = array((0 until 4).map { b =>
       struct(lit(b).as("band"),
         shiftrightunsigned(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL)).as("bkey"))

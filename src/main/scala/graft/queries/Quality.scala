@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge.materialize
 import graft.tables.Tables.t
+import graft.operators.GraftCaches.persist
 
 /** Data-quality / warehouse-utility operators (SURVEY §2.B dq_* and
   * event_* rows): the profiling, anomaly-flagging, and cohort readouts
@@ -37,9 +38,8 @@ object Quality {
       ("o_totalprice", col("o_totalprice"), (c: org.apache.spark.sql.Column) => c.cast("decimal(12,2)").cast("string")),
       ("o_orderdate", col("o_orderdate").cast("date"), (c: org.apache.spark.sql.Column) => c.cast("string")),
       ("o_orderpriority", col("o_orderpriority"), (c: org.apache.spark.sql.Column) => c))
-    val proj = t(s, dir, "orders")
-      .select(specs.map { case (n, c, _) => c.as(n) }: _*)
-      .persist()
+    val proj = persist(t(s, dir, "orders")
+      .select(specs.map { case (n, c, _) => c.as(n) }: _*))
     specs.map { case (n, _, str) =>
       val c = col(n)
       proj.agg(
@@ -452,12 +452,11 @@ object Quality {
     // persisted: the ≤9-row census feeds TWO consumers (the chi2 sum and
     // the scored readout) — without the pin the corpus aggregate runs
     // twice (the dq_chi_square derived-table rule; plan-audited r11)
-    val byDigit = graft.operators.GraftCaches.register(
+    val byDigit = persist(
       t(s, dir, "orders")
         .select(substring(round(col("o_totalprice") * 100).cast("long").cast("string"), 1, 1)
           .cast("int").as("digit"))
-        .groupBy("digit").agg(count(lit(1)).as("n_obs"))
-        .persist())
+        .groupBy("digit").agg(count(lit(1)).as("n_obs")))
     val d38 = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val scored = byDigit
       .withColumn("n_total", sum("n_obs").over(Window.partitionBy()))
@@ -726,9 +725,9 @@ object Quality {
     * The three single-row combine joins are broadcast cross joins
     * (whitelisted class). */
   def dqSequenceGaps(s: SparkSession, dir: String): DataFrame = {
-    val keys = t(s, dir, "orders").select(col("o_orderkey").as("k")).distinct()
-      .withColumn("b", call_function("div", col("k"), lit(1024L)))
-      .persist()
+    val keys = persist(
+      t(s, dir, "orders").select(col("o_orderkey").as("k")).distinct()
+        .withColumn("b", call_function("div", col("k"), lit(1024L))))
     val gapLen = col("k") - col("prev") - 1
     val wIn = Window.partitionBy("b").orderBy("k")
     val inner = keys.withColumn("prev", lag("k", 1).over(wIn))
@@ -934,10 +933,11 @@ object Quality {
     * here; at 100 TB the sketch path is the `agg_hll_union` row (one
     * HLL per day, 7-day merge — no second distinct shuffle). */
   def eventActiveUsers(s: SparkSession, dir: String): DataFrame = {
-    val ud = t(s, dir, "events")
+    // materialized: the dau and wau branches both read it, and a lazy
+    // cache under one plan lets their concurrent stages compute it twice
+    val ud = materialize(t(s, dir, "events")
       .select(to_date(col("ts")).as("day"), col("user_id"))
-      .distinct()
-      .persist()
+      .distinct())
     val dau = ud.groupBy("day").agg(count(lit(1)).as("dau"))
     val wau = ud
       .select(explode(sequence(lit(0), lit(6))).as("i"), col("day"), col("user_id"))
@@ -1084,13 +1084,12 @@ object Quality {
     // the per-distinct-cent census feeds THREE consumers (cumulative,
     // bucket offsets, totals) and is bounded by the fixed acctbal
     // domain — persisted so both corpus scans run once, not per chain
-    val per = graft.operators.GraftCaches.register(
+    val per = persist(
       a.union(b).groupBy("v")
         .agg(sum("isa").as("na"), (count(lit(1)) - sum("isa")).as("nb"))
         // +100000 keeps the dividend non-negative (acctbal ≥ −999.99), so
         // Spark div and DuckDB // agree (both truncate toward zero)
-        .withColumn("bkt", call_function("div", col("v") + 100000L, lit(10000L)))
-        .persist())
+        .withColumn("bkt", call_function("div", col("v") + 100000L, lit(10000L))))
     val offW = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
     val off = per.groupBy("bkt").agg(sum("na").as("ba"), sum("nb").as("bb"))
       .select(col("bkt"), coalesce(sum("ba").over(offW), lit(0L)).as("offa"),
@@ -1137,11 +1136,10 @@ object Quality {
     val b = t(s, dir, "supplier")
       .select((Num.money(col("s_acctbal")) * 100).cast("long").as("v"),
         lit(0L).as("isa"))
-    val per = graft.operators.GraftCaches.register(
+    val per = persist(
       a.union(b).groupBy("v")
         .agg(sum("isa").as("na"), (count(lit(1)) - sum("isa")).as("nb"))
-        .withColumn("bkt", call_function("div", col("v") + 100000L, lit(10000L)))
-        .persist())
+        .withColumn("bkt", call_function("div", col("v") + 100000L, lit(10000L))))
     val offW = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
     val off = per.groupBy("bkt").agg(sum(col("na") + col("nb")).as("bc"))
       .select(col("bkt"), coalesce(sum("bc").over(offW), lit(0L)).as("off"))
@@ -1227,10 +1225,9 @@ object Quality {
     val ev = t(s, dir, "events")
     // per-clicker firsts feed the conversion join AND the clicker total
     // — persisted so the click scan runs once (|clickers| rows cached)
-    val firstClick = graft.operators.GraftCaches.register(
+    val firstClick = persist(
       ev.filter(col("event_type") === "click")
-        .groupBy("user_id").agg(min("ts").as("c_ts"))
-        .persist())
+        .groupBy("user_id").agg(min("ts").as("c_ts")))
     val conv = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts"))
       .join(firstClick, "user_id")

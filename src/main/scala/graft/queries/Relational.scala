@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.tables.Tables.t
+import graft.operators.GraftCaches.persist
 
 /** Relational operator inventory (SURVEY §2.B: scan/filter/project/join/
   * agg/window/sort/set rows).
@@ -1281,10 +1282,9 @@ object Relational {
     * (plan pinned in Round3OpsSpec). At scale you cache exactly these
     * bounded intermediate slices, never raw scans. */
   def cacheSharedScan(s: SparkSession, dir: String): DataFrame = {
-    val slice = t(s, dir, "orders")
+    val slice = persist(t(s, dir, "orders")
       .filter(col("o_orderkey") % 5 === 0)
-      .select("o_orderpriority", "o_totalprice")
-      .persist()
+      .select("o_orderpriority", "o_totalprice"))
     val counts = slice.groupBy("o_orderpriority")
       .agg(count(lit(1)).cast("double").as("v"))
       .withColumn("metric", lit("n_orders"))
@@ -1478,8 +1478,7 @@ object Relational {
     // bucket histogram and the target-bucket probe. The old probe
     // re-scanned lineitem with a `shiftright(pc, 8)` filter that is
     // derived (never pushes down), a second full pass at every scale.
-    val cens = graft.operators.GraftCaches.register(
-      li.groupBy("l_returnflag", "pc").agg(sum("q").as("w")).persist())
+    val cens = persist(li.groupBy("l_returnflag", "pc").agg(sum("q").as("w")))
     // 256-cent buckets (shift 8, ~21k buckets over the price range): the
     // census stays tiny while the exact probe below narrows to ~1/21000
     // of the corpus — the earlier 65536-cent buckets left the target

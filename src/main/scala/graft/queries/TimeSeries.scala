@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge.materialize
 import graft.tables.Tables.t
+import graft.operators.GraftCaches.persist
 
 /** Time-series resampling operators (SURVEY §2.B ts_* rows): the
   * gap-fill / downsample pair every metrics warehouse runs between raw
@@ -500,11 +501,10 @@ object TimeSeries {
     tsLttbDownsampleImpl(s, dir, bound = 200000L)
 
   private[graft] def tsLttbDownsampleImpl(s: SparkSession, dir: String, bound: Long): DataFrame = {
-    val dailyDf = t(s, dir, "events")
+    val dailyDf = persist(t(s, dir, "events")
       .filter(col("event_type") === "purchase")
       .groupBy(to_date(col("ts")).as("day"))
-      .agg(sum((Num.money(col("value")) * 100).cast("long")).as("v"))
-      .persist()
+      .agg(sum((Num.money(col("value")) * 100).cast("long")).as("v")))
     val nDays = dailyDf.count()
     if (nDays > bound && nDays >= 3) {
       val out = lttbDistributed(s, dailyDf, nDays)
@@ -584,7 +584,7 @@ object TimeSeries {
     val maxB = (n - 3) / 3 + 2
     val parts = math.max(s.sparkContext.defaultParallelism,
       (n / 500000L).toInt) // ~500k calendar rows per ranking task
-    val pts = graft.operators.GraftCaches.register(
+    val pts = persist(
       dailyDf
         .repartitionByRange(parts, col("day"))
         .sortWithinPartitions("day")
@@ -598,8 +598,7 @@ object TimeSeries {
         // interior bucket b holds the contiguous ranks {3b-1, 3b, 3b+1}
         .withColumn("slot",
           when(col("b") === 0L || col("b") === maxB, lit(0L))
-            .otherwise(col("i") - (col("b") * 3L - 1L)))
-        .persist())
+            .otherwise(col("i") - (col("b") * 3L - 1L))))
     val cent = pts.groupBy("b")
       .agg(sum("i").as("si"), sum("v").as("sv"), count(lit(1)).as("m"))
     // transition table: for each interior bucket k and each candidate
@@ -854,20 +853,19 @@ object TimeSeries {
     * ANSI mode an overflowing narrowing cast raises rather than
     * wrapping — exact, loud, and a hash-stable long column. */
   def tsLeadLag(s: SparkSession, dir: String): DataFrame = {
-    val daily = t(s, dir, "events")
+    val daily = persist(t(s, dir, "events")
       .groupBy(to_date(col("ts")).as("day"))
       .agg(count_if(col("event_type") === "view").as("x"),
         count_if(col("event_type") === "purchase").as("y"))
       // the day index window is over the CALENDAR-bounded rollup —
       // the same bounded-single-partition exception as every global
       // daily-series op in this file
-      .withColumn("i", row_number().over(Window.orderBy("day")))
-      .persist()
+      .withColumn("i", row_number().over(Window.orderBy("day"))))
     val lags = daily
       .select(col("i"), col("x"), explode(sequence(lit(-7), lit(7))).as("lag"))
       .withColumn("j", col("i") + col("lag"))
     val d38 = (c: Column) => c.cast("decimal(38,0)")
-    val out = lags
+    lags
       .join(daily.select(col("i").as("j"), col("y")), "j")
       .groupBy("lag")
       .agg(count(lit(1)).as("n_pairs"),
@@ -875,8 +873,6 @@ object TimeSeries {
         (count(lit(1)) * sum(d38(col("x")) * d38(col("x"))) - sum(d38(col("x"))) * sum(d38(col("x")))).cast("bigint").as("sxx_num"),
         (count(lit(1)) * sum(d38(col("y")) * d38(col("y"))) - sum(d38(col("y"))) * sum(d38(col("y")))).cast("bigint").as("syy_num"))
       .orderBy("lag")
-    graft.operators.GraftCaches.register(daily)
-    out
   }
 
   def tsDtwBand(s: SparkSession, dir: String): DataFrame = {
@@ -1038,8 +1034,7 @@ object TimeSeries {
     // cents domain, not the row count) it runs once. med/mad are
     // ≤ |types| rows — broadcast so the final per-event attach never
     // shuffles the corpus.
-    val census = graft.operators.GraftCaches.register(
-      e.groupBy("event_type", "cents").agg(count(lit(1)).as("cnt")).persist())
+    val census = persist(e.groupBy("event_type", "cents").agg(count(lit(1)).as("cnt")))
     val med = discMedian(census, "cents", "med_cents")
     val adCensus = census
       .join(broadcast(med), "event_type")
@@ -1076,13 +1071,12 @@ object TimeSeries {
     // `bounds`, `series`, and (through the window frame `w`) BOTH sides
     // of the profile join — unpersisted, the corpus scan + hourly
     // aggregate ran four times per invocation
-    val hourly = graft.operators.GraftCaches.register(
+    val hourly = persist(
       t(s, dir, "events")
         .filter(col("event_type") === "purchase")
         .select(call_function("div", unix_micros(col("ts")), lit(3600000000L)).as("h"),
           cents.as("cents"))
-        .groupBy("h").agg(sum("cents").as("c"))
-        .persist())
+        .groupBy("h").agg(sum("cents").as("c")))
     val bounds = hourly.agg(min("h").as("h0"), max("h").as("h1"))
     val series = bounds.select(explode(sequence(col("h0"), col("h1"))).as("h"))
       .join(hourly, Seq("h"), "left")
@@ -1099,14 +1093,13 @@ object TimeSeries {
     // feeds BOTH profile-join sides, and unpersisted each side re-ran
     // the series gap-fill + explode; it is ≤ |hours|·24 rows, calendar-
     // bounded, so the cache is KB-scale at any corpus size
-    val w = graft.operators.GraftCaches.register(
+    val w = persist(
       series.crossJoin(broadcast(bounds))
         .filter(col("h1") - col("h0") >= 23)
         .select(col("c"), col("h"), explode(sequence(
           greatest(col("h") - 23, col("h0")),
           least(col("h"), col("h1") - 23))).as("i"))
-        .select(col("i"), (col("h") - col("i")).as("k"), col("c"))
-        .persist())
+        .select(col("i"), (col("h") - col("i")).as("k"), col("c")))
     val d2 = w.join(broadcast(w.select(col("i").as("j"), col("k"), col("c").as("cb"))),
         Seq("k"))
       .filter(abs(col("i") - col("j")) >= 12)

@@ -2,7 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge.materialize
 import graft.tables.Tables.t
+import graft.operators.GraftCaches.persist
 import graft.udx.{NGrams, WeightedAvg}
 
 /** Queries exercising the custom UDX pieces (SURVEY §2.B udaf/udtf rows). */
@@ -83,14 +85,15 @@ object UdxQueries {
     // persist the derived key column: 8 bytes/row vs three full md5+
     // string passes (sketch, total, confirm all read it); the sketch
     // and the exact total also share ONE aggregate, so the table is
-    // scanned twice, hashed once
-    val src = t(s, dir, "lineitem")
-      .select(call_function("div", lit(10000L), lit(1L) + u).as("hk"))
-      .persist()
-    // one-row result, cached: candidate explode AND the total both read
-    // it — uncached, each reference re-runs the sketch aggregation
-    val sketch = src.agg(graft.udx.MisraGries.mg(128)(col("hk")).as("mg"),
-      count(lit(1)).as("n")).persist()
+    // scanned twice, hashed once. Lazy: materializing the sketch below
+    // fills it before the returned plan reads it
+    val src = persist(t(s, dir, "lineitem")
+      .select(call_function("div", lit(10000L), lit(1L) + u).as("hk")))
+    // one-row result, materialized: two broadcast builds (candidate
+    // explode AND the total) read it, and a lazy cache under one plan
+    // lets them run the sketch aggregation twice
+    val sketch = materialize(src.agg(graft.udx.MisraGries.mg(128)(col("hk")).as("mg"),
+      count(lit(1)).as("n")))
     val cands = sketch.select(explode(map_keys(col("mg.keys"))).as("hk"))
     src.join(broadcast(cands), "hk")
       .groupBy("hk").agg(count(lit(1)).as("cnt"))

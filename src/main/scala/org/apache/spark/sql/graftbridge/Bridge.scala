@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.classic.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
 import org.apache.spark.sql.execution.LogicalRDD
+import graft.operators.GraftCaches.persist
 
 /** `Dataset.ofRows` is `private[sql]`; this bridge lives in an
   * `org.apache.spark.sql` subpackage to lift a custom LogicalPlan into
@@ -32,11 +33,11 @@ object Bridge {
     * runtime. A measured size is a fixed constant, so it neither
     * compounds nor hides a small frame from the static broadcast rule.
     *
-    * `checkpoint = false`: persist (registered with
-    * [[graft.operators.GraftCaches]], so `SparkEntry.releaseCaches()`
-    * frees it) and count; the size is the CacheManager's. After release
-    * the view rebuilds from lineage like any cached frame. For memo
-    * values, which must stay releasable.
+    * `checkpoint = false`: persist through
+    * [[graft.operators.GraftCaches.persist]] (so
+    * `SparkEntry.releaseCaches()` frees it) and count; the size is the
+    * CacheManager's. After release the view rebuilds from lineage like
+    * any cached frame. For memo values, which must stay releasable.
     *
     * `checkpoint = true`: eager `localCheckpoint`, which truncates the
     * lineage — for loop rounds. The size is the block manager's (default
@@ -56,10 +57,8 @@ object Bridge {
         .map(i => Statistics(sizeInBytes = BigInt(i.memSize + i.diskSize).max(1)))
       lr.copy()(session, measured, None)
     } else {
-      val p = cdf.persist()
-      graft.operators.GraftCaches.register(p)
-      p.count()
-      val qe = p.queryExecution
+      persist(cdf).count()
+      val qe = cdf.queryExecution
       LogicalRDD(qe.analyzed.output, qe.toRdd)(
         session, Some(Statistics(sizeInBytes = qe.withCachedData.stats.sizeInBytes)), None)
     }

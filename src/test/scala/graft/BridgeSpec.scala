@@ -61,7 +61,7 @@ class BridgeSpec extends GraftSpec {
     val runtimeKey = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
     spark.conf.set(runtimeKey, "false")
     try {
-      val cached = GraftCaches.register(frame.persist())
+      val cached = GraftCaches.persist(frame)
       cached.count()
       val back = Bridge.withConfs(spark, "spark.sql.adaptive.enabled" -> "false",
           "spark.sql.shuffle.partitions" -> "3") { child =>
@@ -72,7 +72,7 @@ class BridgeSpec extends GraftSpec {
         assert(!plan.contains("AdaptiveSparkPlan"), s"planned adaptive in the clone:\n$plan")
         assert(plan.contains("InMemoryTableScan"), s"the caller's cache was missed:\n$plan")
         assert(agg.queryExecution.toRdd.getNumPartitions == 3)
-        val out = GraftCaches.register(agg.persist())
+        val out = GraftCaches.persist(agg)
         out.count()
         out
       }

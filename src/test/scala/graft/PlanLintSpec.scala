@@ -186,6 +186,24 @@ class PlanLintSpec extends GraftSpec {
       s"session memo outside SessionMemo (use SessionMemo.memoized): ${offenders.mkString(", ")}")
   }
 
+  test("no persist or cache outside GraftCaches.persist") {
+    // a frame persisted anywhere else is not registered, so
+    // SparkEntry.releaseCaches() would leave its blocks cached
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val caches = root.resolve("graft/operators/GraftCaches.scala")
+    val walk = java.nio.file.Files.walk(root)
+    val sources =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    assert(sources.contains(caches), s"no GraftCaches under ${root.toAbsolutePath}")
+    val call = """\.persist\(|\.cache\(\)|GraftCaches\.register""".r
+    val offenders = sources.filter { f =>
+      f != caches && call.findFirstIn(java.nio.file.Files.readString(f)).isDefined
+    }.map(root.relativize(_).toString)
+    assert(offenders.isEmpty,
+      s"persist, cache or register outside GraftCaches (import GraftCaches.persist): ${offenders.mkString(", ")}")
+  }
+
   test("whitelisted nested-loop queries still have one (keep the list honest)") {
     val stale = allowNestedLoop.toSeq.sorted.filterNot { name =>
       val p = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")

@@ -1,10 +1,11 @@
 package graft
 
 /** `SparkEntry.releaseCaches()` lifecycle: the graph family's
-  * `SessionMemo` entries, `kPeelLoop`'s registered final census, and the
-  * registered hot-key caches are all graft-owned state — release must
-  * drop every block graft added (and nothing it didn't), and the
-  * families must rebuild transparently afterwards. The suite runs
+  * `SessionMemo` entries, `kPeelLoop`'s final census, and every frame a
+  * query persists (all through `GraftCaches.persist`) are graft-owned
+  * state — release must drop every block graft added (and nothing it
+  * didn't), and the queries must rebuild transparently afterwards. The
+  * suite runs
   * against the shared JVM-wide
   * session, so the assertions are DELTA-based (persistent-RDD ids
   * captured before) rather than demanding a globally empty cache —
@@ -66,6 +67,24 @@ class ReleaseCachesSpec extends GraftSpec {
     assert(leaked.isEmpty, s"the peel loop's census survived release: $leaked")
     // the released frame recomputes from lineage to the same rows
     assert(peeled.collect().toSet == want)
+  }
+
+  test("releaseCaches frees the frames the non-graph queries persist") {
+    SparkEntry.releaseCaches()
+    val before = persistentIds
+    val names = Seq("geo_grid_dbscan", "llm_dedup_pipeline", "mm_phash_dedup",
+      "dq_schema_profile", "dq_sequence_gaps", "event_active_users",
+      "cache_shared_scan", "agg_heavy_hitters")
+    val frames = names.map(n => n -> SparkEntry.queries(n)(spark, sfDir))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    val first = frames.map { case (n, df) => n -> rows(df) }
+    assert((persistentIds -- before).nonEmpty, "the queries persisted nothing")
+    SparkEntry.releaseCaches()
+    val leaked = persistentIds -- before
+    assert(leaked.isEmpty, s"${leaked.size} persisted RDDs survived release: $leaked")
+    // the released frames recompute from lineage to the same rows
+    for (((n, df), (_, want)) <- frames.zip(first))
+      assert(rows(df) == want, s"$n diverged after release")
   }
 
   test("releaseCaches is idempotent and safe with nothing registered") {
